@@ -961,8 +961,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         run = CrawlRun(
             spark, docs, robots, tempfile.mkdtemp(prefix="q_crawl_"),
             RoundSpec(n_buckets=8, max_depth=2, max_rounds=3,
-                      politeness=PolitenessSpec(qps=1.0, round_seconds=3.0),
-                      collect_ordering=False),
+                      politeness=PolitenessSpec(qps=1.0, round_seconds=3.0)),
         )
         seeds = spark.createDataFrame(
             [(spec.url_of(1),), (spec.url_of(2),), (spec.url_of(7),)],

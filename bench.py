@@ -88,15 +88,10 @@ def crawl_round_bench(spark, size: str,
             materialize_web(spark, size, docs_path)
         docs = spark.read.parquet(docs_path)
         robots = synthetic_robots(spark, n_hosts)
-        # default = the engine default (fused sign shards); Bloom probe
-        # path benchable via SPARK_GRAFT_BLOOM=1
-        bloom = os.environ.get("SPARK_GRAFT_BLOOM", "0") == "1"
         run = CrawlRun(
             spark, docs, robots, work + "/ck",
             RoundSpec(n_buckets=64, max_depth=3, max_rounds=3,
-                      politeness=PolitenessSpec(qps=10.0, round_seconds=5.0),
-                      seen_mode="bloom" if bloom else "sign", fused=not bloom,
-                      collect_ordering=False),
+                      politeness=PolitenessSpec(qps=10.0, round_seconds=5.0)),
         )
         # deterministic host-spread seed sample (limit() on a parquet read
         # can land on the skew hosts' files and politeness-starve round 0)

@@ -35,13 +35,9 @@ def main() -> None:
     p.add_argument("--n-hosts", type=int, default=0,
                    help="host universe for the synthetic robots dim; 0 = "
                         "derive from docs")
-    p.add_argument("--seen-mode", choices=["sign", "bloom"], default="sign")
-    p.add_argument("--no-fused", action="store_true",
-                   help="use the window admission path instead of the "
-                        "fused cogrouped stage (sign mode only)")
     p.add_argument("--recrawl-ttl", type=int, default=0,
                    help="re-admit urls whose latest crawl is >= this many "
-                        "rounds old (0 = never; requires sign mode)")
+                        "rounds old (0 = never)")
     p.add_argument("--signals", help="(url, uv) parquet from the "
                                      "log-analysis pipeline — joined into "
                                      "the frontier score")
@@ -70,7 +66,6 @@ def main() -> None:
         ).distinct().count()
     robots = synthetic_robots(spark, n_hosts)
 
-    fused = args.seen_mode == "sign" and not args.no_fused
     run = CrawlRun(
         spark, docs, robots, args.ckpt,
         RoundSpec(
@@ -78,10 +73,8 @@ def main() -> None:
             max_rounds=args.rounds,
             politeness=PolitenessSpec(qps=args.qps,
                                       round_seconds=args.round_seconds),
-            seen_mode=args.seen_mode, fused=fused,
             recrawl_ttl_rounds=args.recrawl_ttl or None,
             compact_every=args.compact_every or None,
-            collect_ordering=False,
         ),
         signals=spark.read.parquet(args.signals) if args.signals else None,
         host_ips=spark.read.parquet(args.host_ips) if args.host_ips else None,

@@ -26,8 +26,9 @@ Runs the full training-data dedup flow over a documents table:
 
 ``--from-spans`` assembles the text column from an interleaved-docs table
 (doc_id, spans<kind,text,media_ref,offset>) by concatenating its text
-spans JVM-side — the same input shape the crawl engine reads, so the two
-jobs chain: crawl → linkbase → dedup the fetched corpus.
+spans in ``offset`` order, JVM-side — the same input shape the crawl
+engine reads, so the two jobs chain: crawl → linkbase → dedup the fetched
+corpus.
 
 The session comes from spark-submit's conf; at N or 4N executors the same
 invocation scales via --num-executors (all shuffles are keyed by content
@@ -64,7 +65,8 @@ def main() -> None:
     p.add_argument("--id-col", default="doc_id")
     p.add_argument("--text-col", default="text")
     p.add_argument("--from-spans", action="store_true",
-                   help="assemble text from an interleaved spans column")
+                   help="assemble text from an interleaved spans column "
+                        "(text spans joined in offset order)")
     p.add_argument("--threshold", type=float, default=0.8,
                    help="minhash: min n-gram Jaccard for a pair")
     p.add_argument("--max-hamming", type=int, default=3,
@@ -85,15 +87,17 @@ def main() -> None:
     t0 = time.time()
     raw = spark.read.parquet(args.docs)
     if args.from_spans:
+        # text spans joined in document (offset) order, whatever the
+        # order of the stored array: (offset, text) structs sort by offset
+        texts = F.array_sort(F.transform(
+            F.filter("spans", lambda s: s["kind"] == "text"),
+            lambda s: F.struct(s["offset"].alias("offset"),
+                               s["text"].alias("text")),
+        ))
         docs = raw.select(
             F.col(args.id_col),
-            F.concat_ws(
-                " ",
-                F.transform(
-                    F.filter("spans", lambda s: s["kind"] == "text"),
-                    lambda s: s["text"],
-                ),
-            ).alias(args.text_col),
+            F.concat_ws(" ", F.transform(texts, lambda s: s["text"]))
+            .alias(args.text_col),
         )
     else:
         docs = raw.select(args.id_col, args.text_col)

@@ -53,7 +53,13 @@ def main() -> None:
 
     t0 = time.time()
     pv = spark.read.parquet(args.pv)
-    if args.md5_map and "url_md5" in pv.columns:
+    if "url_md5" in pv.columns and not args.md5_map:
+        p.error("the --pv log has a url_md5 column: pass --md5-map "
+                "(md5, url, ts) to resolve it to literal urls")
+    if "url_md5" not in pv.columns and "url" not in pv.columns:
+        p.error("the --pv log needs a url column or a url_md5 column "
+                f"(with --md5-map); it has {pv.columns}")
+    if "url_md5" in pv.columns:
         md5_map = spark.read.parquet(args.md5_map)
         if "ref_md5" not in pv.columns:
             pv = pv.withColumn("ref_md5", F.lit(None).cast("string"))

@@ -1,33 +1,28 @@
-"""Fused seen-probe + politeness admission: one cogrouped Arrow stage.
+"""Seen-probe + politeness admission: one cogrouped Arrow stage.
 
-The default round runs (1) a sign-shard probe cogroup, then (2) the
-two-level per-host admission windows — two python/shuffle boundaries. In
-fused mode both run inside ONE ``cogroup(...).applyInPandas`` keyed by a
-HOST-derived bucket, so a host's candidates and the bucket's seen-sign
+Probe and admission run inside ONE ``cogroup(...).applyInPandas`` keyed by
+a HOST-derived bucket, so a host's candidates and the bucket's seen-sign
 shard meet once:
 
-    probe   : vectorized searchsorted against the sorted uint64 sign shard
+    probe   : seen.contains — vectorized searchsorted against the sorted
+              uint64 sign shard (seen.decode_signs)
     admit   : pandas sort by (priority, -score, url) + per-host cumcount
-              < budget — the same deterministic order the window path uses
+              < budget — the frontier's deterministic total order
 
 Host state (holdon/dropped) and per-host budgets are joined onto the
 candidates BEFORE the stage (broadcast-sized dims), so the kernel sees
 them as plain columns.
 
-Tradeoff vs the unfused path: buckets are host-keyed (fusable, host-local)
-instead of sign-keyed (perfectly uniform), so a mega-host concentrates its
-rows in one Arrow group. That group is BOUNDED by construction: the
-round's frontier is the kernel's only input, and the frontier merge caps
-every host at ``RoundSpec.frontier_host_cap`` rows
-(round.CrawlRun._cap_frontier, the dispatcher's per-host depth cut) —
-a host can contribute at most ``cap`` rows to its bucket, and a bucket
-holds ~n_hosts/n_buckets hosts of ≤ cap rows each. An in-stage pre-prune
-cannot do better exactly: admission keeps the top-budget UNSEEN rows, and
-seen-ness is only known inside the probe — pruning before it could evict
-an unseen row that seen rows out-rank. Use n_buckets ≫ executor slots.
-
-Requires seen_mode="sign" (exact shards — no FP-confirm join can run
-inside the stage).
+Skew: buckets are host-keyed, so a mega-host concentrates its rows in one
+Arrow group. That group is BOUNDED by construction: the round's frontier
+is the kernel's only input, and the frontier merge caps every host at
+``RoundSpec.frontier_host_cap`` rows (round.CrawlRun._cap_frontier, the
+dispatcher's per-host depth cut) — a host can contribute at most ``cap``
+rows to its bucket, and a bucket holds ~n_hosts/n_buckets hosts of ≤ cap
+rows each. An in-stage pre-prune cannot do better exactly: admission
+keeps the top-budget UNSEEN rows, and seen-ness is only known inside the
+probe — pruning before it could evict an unseen row that seen rows
+out-rank. Use n_buckets ≫ executor slots.
 """
 
 from __future__ import annotations
@@ -38,14 +33,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .seen import _bucket_spread
+from .seen import _bucket_spread, contains, decode_signs
 
 
 def fused_probe_admit(candidates: DataFrame, seen_state: DataFrame,
                       host_state: DataFrame, budgets: DataFrame | None,
                       default_budget: int, round_no: int) -> DataFrame:
     """Returns candidates + (maybe_seen, admitted). ``candidates`` must
-    carry (url, host, depth, referer, sign, bucket, score, priority)."""
+    carry (url, host, depth, referer, vip, sign, bucket, score,
+    priority)."""
     c = candidates.join(host_state, "host", "left")
     if budgets is not None:
         c = c.join(F.broadcast(budgets), "host", "left")
@@ -71,29 +67,15 @@ def fused_probe_admit(candidates: DataFrame, seen_state: DataFrame,
     def fn(_key, cand_pdf: pd.DataFrame, state_pdf: pd.DataFrame):
         if not len(cand_pdf):
             return pd.DataFrame(columns=keep_cols)
-        if len(state_pdf) and state_pdf["state"].iloc[0] is not None:
-            seen = np.frombuffer(
-                bytes(state_pdf["state"].iloc[0]), dtype=np.uint64
-            )
-        else:
-            seen = np.zeros(0, dtype=np.uint64)
         signs = cand_pdf["sign"].to_numpy().astype(np.uint64)
-        if len(seen):
-            idx = np.clip(np.searchsorted(seen, signs), 0, len(seen) - 1)
-            maybe_seen = seen[idx] == signs
-        else:
-            maybe_seen = np.zeros(len(signs), dtype=bool)
+        maybe_seen = contains(decode_signs(state_pdf), signs)
         cand_pdf = cand_pdf.assign(maybe_seen=maybe_seen, admitted=False)
 
         # J4 VIP override: seen VIP rows stay admission-eligible
-        vip = (
-            cand_pdf["vip"].fillna(False).to_numpy(dtype=bool)
-            if "vip" in cand_pdf.columns
-            else np.zeros(len(cand_pdf), dtype=bool)
-        )
+        vip = cand_pdf["vip"].fillna(False).to_numpy(dtype=bool)
         unseen = cand_pdf.loc[~maybe_seen | vip]
         if len(unseen):
-            # deterministic admission order == the window path's order
+            # deterministic admission order: the frontier's total order
             s = unseen.sort_values(
                 ["host", "priority", "score", "url"],
                 ascending=[True, True, False, True],

@@ -11,13 +11,15 @@ Re-expresses the reference's LoadController + robots pipeline (cites into
   big-family hosts to every bucket and scatters their URLs randomly
   (robots/data_prepare.cc:71-139). In Spark the robots dim is simply
   **broadcast** — the skew workaround dissolves; the residual skew in
-  *stateful host-grouped* stages is handled by urlkit.salted_bucket.
+  *stateful host-grouped* stages is bounded by the round's per-host
+  frontier cap (round.CrawlRun._cap_frontier, salted two-level windows).
 - LoadController (crawler/crawler/crawl/load_controller.h:18-52, .cc:149-242):
   per-host/ip (max_qps, max_connections) with a QPS window check, holdon
   after consecutive failures, drop at max_failed_times. Batch rendering:
   each crawl round admits at most ``budget = qps × round_seconds`` URLs per
-  host, in priority order; hosts in holdon admit nothing; budgets come from
-  a broadcast config dim (host_load_control.txt role).
+  host, in priority order (fused.fused_probe_admit); hosts in holdon admit
+  nothing; budgets come from a broadcast config dim (host_load_control.txt
+  role).
 """
 
 from __future__ import annotations
@@ -64,7 +66,7 @@ class PolitenessSpec:
     holdon_rounds: int = 1           # ≈ HOLDON_SECONDS / round_seconds
     max_failed_times: int = MAX_FAILED_TIMES
     robots_policy_level: int = 2     # strict spider: crawl level ≥ 2
-    salt_buckets: int = 16           # two-level admission salt (skew guard)
+    salt_buckets: int = 16           # two-level host-cap salt (skew guard)
 
     @property
     def default_budget(self) -> int:
@@ -143,7 +145,7 @@ def window_budgets(budgets: DataFrame | None, round_no: int,
     HH:MM-HH:MM``, both ends closed; parse load_controller.cc:46-92): when
     the budget dim carries ``begin_min``/``end_min`` columns, keep the
     rows whose window covers this round's minute-of-day and emit the
-    plain (host, budget) dim the admission paths consume. Hosts with no
+    plain (host, budget) dim the admission stage consumes. Hosts with no
     covering window fall back to the default budget (default_ip_load
     role). Windows per host must not overlap (the reference CHECKs this);
     on overlap the smallest budget wins deterministically."""
@@ -155,70 +157,6 @@ def window_budgets(budgets: DataFrame | None, round_no: int,
                        & (F.col("end_min") >= minute))
         .groupBy("host").agg(F.min("budget").alias("budget"))
     )
-
-
-# --------------------------------------------------------------------------
-# Round admission (L1 as window math)
-# --------------------------------------------------------------------------
-
-def admit_round(candidates: DataFrame, host_state: DataFrame,
-                budgets: DataFrame | None, spec: PolitenessSpec,
-                round_no: int) -> DataFrame:
-    """Split this round's candidates into admitted vs carryover.
-
-    Per host: order by (priority asc, score desc, url asc) — the frontier's
-    total order — and admit the first ``budget`` rows. Hosts holding on
-    (consec_failures ≥ threshold until holdon_until_round) or dropped admit
-    nothing. Adds ``admitted`` boolean; caller splits.
-
-    Scale: the window shuffle is partitioned by host — the same partitioning
-    the seen-probe and the fetch stage use, so AQE reuses the exchange. Skew
-    (mega-hosts) is bounded because the admitted set per host ≤ budget and
-    the carryover tail is cut by per_host_topk upstream.
-    """
-    # host_state grows with the host universe (~10^7 rows at full scale):
-    # no broadcast hint — AQE broadcasts while it is small and falls back
-    # to a shuffle join aligned with the window's host partitioning after
-    c = candidates.join(host_state, "host", "left")
-    if budgets is not None:
-        c = c.join(F.broadcast(budgets), "host", "left")
-        budget_col = F.coalesce(F.col("budget"), F.lit(spec.default_budget))
-    else:
-        budget_col = F.lit(spec.default_budget)
-    order = (F.asc("priority"), F.desc("score"), F.asc("url"))
-
-    # two-level salted top-k (the J2/robots skew trick made deterministic):
-    # a mega-host's candidates would otherwise sort inside ONE window
-    # partition. Level 1 keeps each (host, salt)'s local top-budget — the
-    # global per-host top-budget is a subset of the union, so level 2 over
-    # the ~budget*n_salt survivors is exact and tiny.
-    if spec.salt_buckets > 1:
-        salt = F.pmod(F.xxhash64("url"), F.lit(spec.salt_buckets))
-        w1 = Window.partitionBy("host", salt.alias("_salt")).orderBy(*order)
-        c = c.withColumn("_rn1", F.row_number().over(w1))
-        pruned = c.filter(F.col("_rn1") <= budget_col)
-        rest = c.filter(F.col("_rn1") > budget_col).withColumn(
-            "admitted", F.lit(False)
-        )
-    else:
-        pruned, rest = c, None
-
-    w = Window.partitionBy("host").orderBy(*order)
-    blocked = (
-        F.coalesce(F.col("dropped"), F.lit(False))
-        | (F.coalesce(F.col("holdon_until_round"), F.lit(-1)) >= round_no)
-    )
-    out = pruned.withColumn("rn", F.row_number().over(w)).withColumn(
-        "admitted", ~blocked & (F.col("rn") <= budget_col)
-    ).drop("rn")
-    if rest is not None:
-        out = out.unionByName(rest)
-    drop_cols = ["consec_failures", "holdon_until_round", "dropped"]
-    if spec.salt_buckets > 1:
-        drop_cols.append("_rn1")
-    if budgets is not None:
-        drop_cols.append("budget")
-    return out.drop(*drop_cols)
 
 
 def ip_cap_admitted(adm: DataFrame, host_ips: DataFrame,

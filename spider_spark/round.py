@@ -5,8 +5,8 @@ prepare_crawl_data.sh → run_schedule.sh → fetchers → merges) and the onlin
 queue cycle (§3.2, scheduler.cc:316-438) as ONE DataFrame DAG per round,
 with durable state between rounds:
 
-    frontier ──(seen-probe: Bloom shards + exact confirm)──▶ unseen
-      unseen ──(politeness admission per host budget)──▶ admitted ∪ carry
+    frontier ──(fused seen-probe + per-host admission, fused.py)──▶
+             admitted ∪ carry
     admitted ──(simulated fetch over the documents table)──▶ results
      results ──(span outlink extraction → canonicalize → rules → robots
                 → depth cap → in-batch dedup)──▶ new candidates
@@ -40,7 +40,8 @@ from pyspark.sql import types as T
 
 from . import politeness as pol
 from . import urlkit
-from .seen import BloomShards, BloomSpec
+from .fused import fused_probe_admit
+from .seen import SignShards
 from .spans import extract_outlink_arrays
 
 # logical clock anchor: round r fetches stamp 2020-01-01 + r days
@@ -71,7 +72,7 @@ class RoundSpec:
     config (BASELINE.md §A)."""
 
     n_buckets: int = 256         # seen-shard / fused-kernel bucket count.
-    # In fused mode a bucket is ONE Arrow group whose input is bounded by
+    # A bucket is ONE Arrow group whose input is bounded by
     # Σ over its hosts of min(host_rows, frontier_host_cap) — so per-group
     # rows ≈ frontier_size / n_buckets on a spread frontier and ≤
     # hosts_per_bucket × cap under skew. Size it ≫ executor slots AND so
@@ -81,26 +82,9 @@ class RoundSpec:
     max_depth: int = 4           # extractor depth gate, url.proto:9-11
     max_rounds: int = 50
     politeness: pol.PolitenessSpec = field(default_factory=pol.PolitenessSpec)
-    bloom: BloomSpec = field(default_factory=BloomSpec)
-    seen_mode: str = "sign"      # "sign" (exact 8B/url shards — the
-    # reference's Redis CalcUrlSign semantics, no confirm join needed;
-    # DEFAULT) or "bloom" (opt-in when seen-state memory is the constraint:
-    # ~10 bits/url, but FP hits need a confirm anti-join that re-reads the
-    # growing linkbase every round)
-    fused: bool = True           # sign mode only: probe+admission in one
-    # cogrouped Arrow stage (fused.py) — saves 2 shuffles + 1 python
-    # stage per round; buckets become host-keyed. Measured fastest config
-    # AND best scaling efficiency (BENCH.md §3) — the default
-    confirm_hits: bool = True    # verify Bloom hits with an exact join
-    collect_ordering: bool = False  # driver-side ordering witness: tests
-    # opt IN — the witness collects every fetched url to the driver each
-    # round, which is test instrumentation, never part of a production
-    # round (a library-default collect in the hot path would be a
-    # driver-side bottleneck at any real scale)
     recrawl_ttl_rounds: int | None = None  # scheduler.cc:381-393: a url
     # whose latest crawl is ≥ ttl rounds old stops counting as seen (its
     # sign is deleted from the shard), so rediscovery re-admits it.
-    # Requires seen_mode='sign' (Bloom cannot delete).
     compact_every: int | None = None  # fold committed linkbase deltas
     # (latest-round-wins, compact_linkbase) every N committed rounds —
     # bounds the delta-partition count a long crawl accumulates
@@ -119,28 +103,6 @@ class RoundSpec:
     # mega-host can put at most `cap` rows into its host bucket. Overflow
     # rows are dropped (re-extraction rediscovers them); order kept is
     # (vip desc, depth asc, url asc) — VIPs always survive the cut.
-    seed: int = 42
-    compress_round_caches: bool = False  # in-memory columnar compression
-    # for the PER-ROUND caches (probed frontier, fetched batch, deduped
-    # outlinks, merged next frontier, bootstrap candidates). These are
-    # round-snapshot-scale — O(frontier + batch) rows of short strings,
-    # ~150 B/row, i.e. ~1.5 TB uncompressed at a 10^10-URL frontier ≈
-    # 1.5 GB/executor on the 1000-executor target — so memory is not the
-    # binding constraint for them, and default-off skips the dict/RLE
-    # codec CPU on their many per-round consumer scans. Measured effect
-    # on the local box: WITHIN NOISE (7 alternating cold-JVM pairs at
-    # cpus=32/large split 2/2/2 with one outlier each way) — the default
-    # is chosen on the executor-memory argument, not a measured win.
-    # The corpus-scale adjacency cache is governed separately
-    # (compress_adjacency_cache below): that is where compression buys
-    # real memory headroom. Set True for memory-constrained executors.
-    compress_adjacency_cache: bool = True  # columnar compression for the
-    # corpus-scale packed-adjacency cache (one row per page with its
-    # outlink array, scanned twice per round by the fetch/extraction
-    # joins). Default ON: at 10^11 edges the array column is ~6 TB raw
-    # and dict/RLE over repeated host prefixes is the difference between
-    # caching it and spilling it. Flip False on memory-rich clusters to
-    # trade that headroom for codec CPU on the two per-round scans.
 
 
 def score_expr(depth, uv=None):
@@ -212,18 +174,7 @@ class CrawlRun:
             .groupBy("url").agg(F.max("uv").alias("uv"))
             if signals is not None else None
         )
-        if spec.seen_mode == "sign":
-            from .seen import SignShards
-
-            self.bloom = SignShards()
-        else:
-            if spec.recrawl_ttl_rounds is not None:
-                raise ValueError(
-                    "recrawl_ttl_rounds requires seen_mode='sign' (Bloom "
-                    "filters cannot delete; see seen.CuckooShards for the "
-                    "deletable compact alternative)"
-                )
-            self.bloom = BloomShards(spec.bloom)
+        self.shards = SignShards()
         # Pre-extract the adjacency once: (doc_id, outlink). At scale this
         # is the Iceberg documents table scanned with column pruning (spans
         # only); the extraction is JVM-side higher-order functions. Persist
@@ -251,27 +202,25 @@ class CrawlRun:
             extract_outlink_arrays(docs).repartition(n_part, "doc_id")
             .dropDuplicates(["doc_id"])
         )
-        if spec.compress_adjacency_cache:
-            self.adjacency = adjacency.persist()
-        else:
-            key = "spark.sql.inMemoryColumnarStorage.compressed"
-            prev = spark.conf.get(key)
-            spark.conf.set(key, "false")
-            try:
-                self.adjacency = adjacency.persist()
-            finally:
-                spark.conf.set(key, prev)
+        # the default columnar compression stays ON for this corpus-scale
+        # cache: at 10^11 edges the outlink array column is ~6 TB raw, and
+        # dict/RLE over repeated host prefixes is the difference between
+        # caching it and spilling it
+        self.adjacency = adjacency.persist()
 
     def _persist_round(self, df: DataFrame) -> DataFrame:
-        """Persist a per-round cache honoring ``spec.compress_round_caches``.
-        The columnar-compression conf is read at cache-BUILD time, so
-        toggling it around ``.persist()`` scopes the choice to this one
-        cache (verified: two caches built under opposite settings in one
-        session report ~28× different memSize); the finally-restore keeps
-        the session default — which the corpus-scale adjacency cache uses
-        — untouched even if plan analysis throws."""
-        if self.spec.compress_round_caches:
-            return df.persist()
+        """Persist a per-round cache with in-memory columnar compression
+        OFF. These caches (probed frontier, fetched batch, deduped
+        outlinks, merged next frontier, bootstrap candidates) are
+        round-snapshot-scale — O(frontier + batch) rows of short strings,
+        ~1.5 GB/executor at a 10^10-URL frontier on 1000 executors — so
+        memory does not bind for them, and skipping the dict/RLE codec
+        saves CPU on their many per-round consumer scans (measured within
+        noise on a local box; the choice rests on the memory argument).
+        The conf is read at cache-BUILD time, so toggling it around
+        ``.persist()`` scopes the choice to this one cache; the
+        finally-restore keeps the session default — which the corpus-scale
+        adjacency cache uses — untouched even if plan analysis throws."""
         spark = df.sparkSession
         key = "spark.sql.inMemoryColumnarStorage.compressed"
         prev = spark.conf.get(key)
@@ -346,29 +295,18 @@ class CrawlRun:
         return c.select("url", "host", "depth", "referer", "vip")
 
     def _with_keys(self, frontier: DataFrame) -> DataFrame:
-        # seen-shard bucket keys off the URL SIGN, not the host: the dedupe
-        # stage needs no host affinity, and sign-keyed buckets are uniform
-        # by construction — a mega-host cannot skew the probe/update
-        # shuffles (the salted-shuffle requirement, SURVEY §7.4-3; host
-        # grouping happens only in the politeness window, which admission
-        # pre-prunes two-level — politeness.admit_round)
+        # host-keyed buckets: the fused kernel groups probe+admission per
+        # bucket, so a host's rows must share one (see fused.py for the
+        # skew bound)
         if self.signals is not None:
             frontier = frontier.join(self.signals, "url", "left")
             score = score_expr(F.col("depth"), F.col("uv"))
         else:
             score = score_expr(F.col("depth"))
-        if self.spec.fused:
-            # fused mode groups probe+admission per bucket, so a host's
-            # rows must share a bucket (see fused.py tradeoff note)
-            bucket = urlkit.host_bucket(F.col("host"), self.spec.n_buckets)
-        else:
-            # sign-keyed buckets are uniform — skew-proof dedupe shuffle
-            bucket = F.pmod(
-                urlkit.url_sign64(F.col("url")), F.lit(self.spec.n_buckets)
-            ).cast("int")
         out = (
             frontier.withColumn("sign", urlkit.url_sign64(F.col("url")))
-            .withColumn("bucket", bucket)
+            .withColumn("bucket",
+                        urlkit.host_bucket(F.col("host"), self.spec.n_buckets))
             .withColumn("score", score)
             .withColumn("priority", band_base(score))
         )
@@ -390,11 +328,11 @@ class CrawlRun:
            BROADCAST; under-cap hosts bypass via a broadcast anti-join
            (no shuffle). When no host exceeds the cap the window stages
            see zero rows.
-        2. **two-level salted windows** over the hot rows only (the
-           admit_round trick): level 1 keeps each (host, salt)'s local
-           top-cap — the global per-host top-cap is a subset of the
-           union — so no single task sorts a mega-host's full candidate
-           set; level 2 ranks ≤ cap × salt_buckets survivors.
+        2. **two-level salted windows** over the hot rows only: level 1
+           keeps each (host, salt)'s local top-cap — the global per-host
+           top-cap is a subset of the union — so no single task sorts a
+           mega-host's full candidate set; level 2 ranks ≤ cap ×
+           salt_buckets survivors.
 
         The groupBy-merge exchange feeding this is identical in the count
         subquery and both branches, so Spark computes it once
@@ -425,12 +363,11 @@ class CrawlRun:
     def _seen_keys(self, df: DataFrame) -> DataFrame:
         """(bucket, sign) under the SAME keying _with_keys uses — the
         layout contract the resume validator guards."""
-        sign = urlkit.url_sign64(F.col("url"))
-        if self.spec.fused:
-            bucket = urlkit.host_bucket(F.col("host"), self.spec.n_buckets)
-        else:
-            bucket = F.pmod(sign, F.lit(self.spec.n_buckets)).cast("int")
-        return df.select(bucket.alias("bucket"), sign.alias("sign"))
+        return df.select(
+            urlkit.host_bucket(F.col("host"), self.spec.n_buckets)
+            .alias("bucket"),
+            urlkit.url_sign64(F.col("url")).alias("sign"),
+        )
 
     # -- per-round paths ----------------------------------------------------
 
@@ -446,8 +383,7 @@ class CrawlRun:
     # them on read: parquet schema inference costs a driver-side Spark job
     # + footer read per call (~90 ms × 3 state reads per round, measured
     # in the cProfile of the round's driver thread), and on an object
-    # store it is a remote round-trip. `_read_infer` stays for the
-    # resume-compat probe that must see the file's REAL columns.
+    # store it is a remote round-trip.
     _STATE_SCHEMAS = {
         "frontier": FRONTIER_SCHEMA,
         "seen_state": "bucket int, state binary",
@@ -460,9 +396,6 @@ class CrawlRun:
         if schema is not None:
             reader = reader.schema(schema)
         return reader.parquet(os.path.join(self._round_dir(r), name))
-
-    def _read_infer(self, r: int, name: str) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self._round_dir(r), name))
 
     def _table_files(self, path: str) -> list[dict]:
         """Per-data-file stats for one just-written state table — the
@@ -737,14 +670,11 @@ class CrawlRun:
                 ).alias("_cmds")
             )
             out = out.join(cmds, "url", "left")
-            # coalesce even when the column exists: pre-widening rows read
-            # update_fail_cnt as NULL, and NULL + n_r would make dead_cmd
+            # coalesce: pre-widening rows read update_fail_cnt as NULL
+            # under the bound schema, and NULL + n_r would make dead_cmd
             # NULL — the row would then vanish from BOTH the deleted count
             # (filter(_dead_cmd) drops NULL) and the survivors
-            base_fail = (
-                F.coalesce(F.col("update_fail_cnt"), F.lit(0))
-                if "update_fail_cnt" in lb.columns else F.lit(0)
-            )
+            base_fail = F.coalesce(F.col("update_fail_cnt"), F.lit(0))
             applicable = F.filter(
                 F.coalesce(
                     F.col("_cmds"),
@@ -758,9 +688,8 @@ class CrawlRun:
             dead_cmd = has_d | (
                 (n_r > 0) & (new_fail >= F.lit(max_update_failed))
             )
-            out = out.withColumn("_dead_cmd", dead_cmd)
-            if "update_fail_cnt" in lb.columns:
-                out = out.withColumn("update_fail_cnt", new_fail)
+            out = out.withColumn("_dead_cmd", dead_cmd).withColumn(
+                "update_fail_cnt", new_fail)
             # dedicated count: one extra pass over the PERSISTED per-url
             # aggregate (+ the broadcast command join) — it cannot ride
             # the staged write's Observation because dead rows are
@@ -819,9 +748,8 @@ class CrawlRun:
             raise ValueError(f"no committed rounds under {self.ckpt}; "
                              "bootstrap first")
         self._recover_enqueue()  # complete/garbage-collect a prior crash
-        # same layout/compat guard as resume: the schema-bound frontier
-        # read would silently fill a pre-'vip' checkpoint's missing column
-        # with NULLs instead of failing — validate before touching state
+        # same state-layout guard as resume — validate before touching
+        # state
         self._validate_resume_spec()
         cand = self._prepare_candidates(
             urls.select(
@@ -1077,7 +1005,7 @@ class CrawlRun:
         if cand_cache is not None:
             cand_cache.unpersist()
         self._write(
-            self.bloom.init_state(self.spark, self.spec.n_buckets), 0,
+            self.shards.init_state(self.spark, self.spec.n_buckets), 0,
             "seen_state",
         )
         self._write(pol.init_host_state(self.spark), 0, "host_state")
@@ -1100,12 +1028,12 @@ class CrawlRun:
         """The knobs that shape the persisted state layout. Resuming with a
         different value would probe seen_state under mismatched bucket keys
         (every probe misses → seen URLs re-admitted) — so the round-0
-        manifest records them and resume validates."""
-        return {
-            "seen_mode": self.spec.seen_mode,
-            "fused": self.spec.fused,
-            "n_buckets": self.spec.n_buckets,
-        }
+        manifest records them and resume validates. The round has one
+        layout (host-keyed exact sign shards); its two constant entries
+        keep checkpoints written under the former layout switches
+        comparable, so only the default layout resumes."""
+        return {"seen_mode": "sign", "fused": True,
+                "n_buckets": self.spec.n_buckets}
 
     def _validate_resume_spec(self) -> None:
         path = os.path.join(self._round_dir(0), "manifest.json")
@@ -1113,21 +1041,6 @@ class CrawlRun:
             return
         with open(path) as f:
             recorded = json.load(f).get("spec")
-        if recorded is None:
-            # pre-fingerprint checkpoint: still guard the one schema change
-            # run_round depends on — a frontier without the 'vip' column
-            # would otherwise die later with an opaque unresolved-column
-            # AnalysisException instead of a resume error
-            last = self.last_committed_round()
-            if last is not None and "vip" not in self._read_infer(
-                last, "frontier"
-            ).columns:
-                raise ValueError(
-                    f"checkpoint at {self.ckpt} predates the frontier 'vip' "
-                    "column (and records no state-layout spec); re-bootstrap "
-                    "or backfill vip=false before resuming"
-                )
-            return
         current = self._spec_fingerprint()
         if recorded != current:
             raise ValueError(
@@ -1148,14 +1061,11 @@ class CrawlRun:
 
     def _update_manifest(self, path: str, mutate) -> None:
         """Load-mutate-atomically-rewrite a commit manifest's lineage.
-        No-op when the manifest doesn't exist or predates per-file
-        lineage (pre-upgrade checkpoints have no ``files`` section)."""
+        No-op when the manifest doesn't exist."""
         if not os.path.exists(path):
             return
         with open(path) as f:
             m = json.load(f)
-        if "files" not in m:
-            return
         mutate(m)
         self._write_manifest_json(path, m)
 
@@ -1169,7 +1079,8 @@ class CrawlRun:
         seen_state = self._read(r, "seen_state")
         host_state = self._read(r, "host_state")
 
-        # 1+2. seen-probe then politeness admission. The admission split
+        # 1+2. seen-probe + politeness admission in one cogrouped Arrow
+        #    stage (fused.py). The admission split
         #    feeds four consumers (fetch, carryover, seen-update, metrics)
         #    — cache it so the probe subtree runs once per round.
         # time-of-day windows (host_load_control.txt): the budget dim may
@@ -1177,46 +1088,16 @@ class CrawlRun:
         budgets_r = pol.window_budgets(
             self.budgets, r, self.spec.politeness
         )
-        if self.spec.fused:
-            if self.spec.seen_mode != "sign":
-                raise ValueError("fused mode requires seen_mode='sign'")
-            from .fused import fused_probe_admit
-
-            flagged = fused_probe_admit(
-                frontier, seen_state, host_state, budgets_r,
-                self.spec.politeness.default_budget, r,
-            )
-            # J4 VIP override (mr_selector_r1_reducer.cc:62-108): a seen
-            # record drops the URL unless it is VIP — homepages / seeds /
-            # search-click pages re-admit for freshness
-            adm = flagged.filter(
-                ~F.col("maybe_seen") | F.col("vip")
-            ).drop("maybe_seen")
-        else:
-            # seen-probe: Bloom shards; hits confirmed exactly against the
-            # linkbase (so FPs cost one small join, never correctness).
-            # VIP rows bypass the whole seen-drop (J4 override) — they skip
-            # the confirm join too.
-            probed = self.bloom.probe(frontier, seen_state)
-            confirm = self.spec.confirm_hits and self.spec.seen_mode != "sign"
-            # linkbase read built only where consumed: on the default
-            # fused/sign path the parquet listing would walk O(rounds)
-            # delta dirs on the driver every round for an unused plan
-            linkbase = (
-                self._linkbase(r - 1) if confirm and r > 0 else None
-            )
-            if confirm and linkbase is not None:
-                hits = probed.filter(F.col("maybe_seen") & ~F.col("vip"))
-                fps = hits.join(linkbase.select("url"), "url", "left_anti")
-                unseen = probed.filter(
-                    ~F.col("maybe_seen") | F.col("vip")
-                ).unionByName(fps)
-            else:
-                unseen = probed.filter(~F.col("maybe_seen") | F.col("vip"))
-            unseen = unseen.drop("maybe_seen")
-            adm = pol.admit_round(
-                unseen, host_state, budgets_r, self.spec.politeness, r
-            )
+        flagged = fused_probe_admit(
+            frontier, seen_state, host_state, budgets_r,
+            self.spec.politeness.default_budget, r,
+        )
+        # J4 VIP override (mr_selector_r1_reducer.cc:62-108): a seen
+        # record drops the URL unless it is VIP — homepages / seeds /
+        # search-click pages re-admit for freshness
+        adm = flagged.filter(
+            ~F.col("maybe_seen") | F.col("vip")
+        ).drop("maybe_seen")
         if self.host_ips is not None and self.ip_budgets is not None:
             adm = pol.ip_cap_admitted(adm, self.host_ips, self.ip_budgets)
         adm = self._persist_round(adm)
@@ -1343,15 +1224,9 @@ class CrawlRun:
             )
             expired = expiring.join(later.distinct(), "url", "left_anti")
             deletes = self._seen_keys(expired)
-        if deletes is not None:
-            new_seen = self.bloom.update(
-                admitted.select("bucket", "sign"), seen_state,
-                deletes=deletes,
-            )
-        else:
-            new_seen = self.bloom.update(
-                admitted.select("bucket", "sign"), seen_state
-            )
+        new_seen = self.shards.update(
+            admitted.select("bucket", "sign"), seen_state, deletes=deletes,
+        )
         new_host_state = pol.update_host_state(
             host_state, fetched.select("host", "success"),
             self.spec.politeness, r,
@@ -1425,12 +1300,6 @@ class CrawlRun:
             for f in futures:
                 f.result()
 
-        if self.spec.collect_ordering:
-            admitted_urls = sorted(
-                row["url"] for row in fetched.select("url").collect()
-            )
-        else:
-            admitted_urls = []
         # lineage metrics ride the write jobs (zero extra actions):
         # commit marker records what each state table received this round
         metrics = {
@@ -1455,11 +1324,14 @@ class CrawlRun:
              # footers, no extra Spark jobs
              "files": self._snapshot_files(r + 1, lb_delta_round=r)},
         )
-        return {"round": r, "admitted_urls": admitted_urls, **metrics}
+        return {"round": r, **metrics}
 
     def run(self, seeds: DataFrame, resume: bool = False) -> list[dict]:
-        """Run to frontier exhaustion (or max_rounds). Returns the ordering
-        witness: per round, the sorted admitted-url batch."""
+        """Run to frontier exhaustion (or max_rounds). Returns each round's
+        metrics (the commit manifest's ``metrics`` plus ``round``); the
+        admitted batch of round r is linkbase delta r
+        (``state_asof(r + 1, "linkbase").filter(round == r)``) until a
+        compaction folds it."""
         start = 0
         if resume:
             last = self.last_committed_round()

@@ -1,42 +1,26 @@
-"""URL-seen set: exact anti-join oracle + partitioned Bloom/cuckoo shards.
+"""URL-seen set: exact sign shards.
 
-The reference keeps "have we crawled this" state in two places: the full
-linkbase TSV table anti-joined each round via ``set_filter
---filt_out_in_dict`` (crawler/crawler/control/task_prepare/scripts/
-sort.sh:38-74) and a Redis hash keyed by the 64-bit url sign for the online
-path (crawler/crawler2/general_crawler/scheduler.cc:289-314).
+The reference keeps its online "have we crawled this" state in a Redis
+hash keyed by the 64-bit url sign ``base::CalcUrlSign(url)``
+(crawler/crawler2/general_crawler/url.proto:18-27, scheduler.cc:289-314).
+The Spark rendering is :class:`SignShards`: per bucket a SORTED numpy
+uint64 array of url signs, stored as a ``(bucket int, state binary)``
+DataFrame (checkpointable as parquet/Iceberg binary columns). The sign IS
+the identity, so hash-collision semantics match the reference exactly and
+no false-positive confirm join is needed.
 
-Spark-first re-expression:
+The blob format lives here and only here: :func:`decode_signs` turns one
+bucket's state rows into the sorted sign array and :func:`contains` tests
+membership. The fused probe+admit kernel (fused.py) and
+:meth:`SignShards.update` both go through them.
 
-- :func:`exact_unseen` — ``left_anti`` join against the linkbase. Always
-  correct; the differential oracle for the filters. At 10^10 rows this is
-  a full shuffle of the candidate set against the seen set every round —
-  correct but shuffle-heavy, hence:
-- :class:`BloomShards` — one compact Bloom bitmap per host-hash bucket,
-  stored as a ``(bucket int, state binary)`` DataFrame (checkpointable as
-  parquet/Iceberg binary columns). Probe/update run as cogrouped
-  ``applyInPandas`` over the bucket key: the candidate rows of a bucket and
-  that bucket's few-MB bitmap meet on one executor, all bit math is
-  vectorized numpy over the already-computed xxhash64 signs — zero per-row
-  Python. A Bloom hit is only *maybe seen*; policy decides whether to
-  confirm hits with an exact join on the (small) hit subset or accept the
-  false-positive rate as a crawl-economics tradeoff (both supported).
-- :class:`CuckooShards` — same sharding, cuckoo filter state, supporting
-  **deletion** (recrawl-TTL expiry re-admits URLs; linkbase ``D`` commands,
-  mr_link_merge_reducer.cc:85-99) which a plain Bloom cannot.
-
-Scale notes (100 TB / 10^10 URLs): with ~12 bits/URL at fpp≈0.3%, the seen
-set is ~15 GB of bitmap split over ``n_buckets`` shards — thousands of
-shards of a few MB each, each co-resident with its bucket's candidates.
-Probe is one shuffle by bucket (the same shuffle the politeness grouping
-needs anyway, so it's free), versus the exact path's shuffle of the full
-multi-TB linkbase.
+Cost: 8 B/url — 80 GB for 10^10 URLs, ~1.2 MB/bucket over 65k buckets,
+each co-resident with its bucket's candidates. Probe = vectorized binary
+search against the sorted array; update = sorted merge; deletion (recrawl
+TTL) = set difference.
 """
 
 from __future__ import annotations
-
-import math
-from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
@@ -44,41 +28,32 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# splitmix64 constants for deriving the second hash from the url sign
-_MIX1 = np.uint64(0xBF58476D1CE4E5B9)
-_MIX2 = np.uint64(0x94D049BB133111EB)
+STATE_SCHEMA = T.StructType(
+    [
+        T.StructField("bucket", T.IntegerType(), False),
+        T.StructField("state", T.BinaryType(), True),
+    ]
+)
 
 
-def _h2(signs: np.ndarray) -> np.ndarray:
-    """Second independent 64-bit hash derived from the sign (splitmix64
-    finalizer) — keeps all Bloom probes pure numpy over the one hash Spark
-    already computed JVM-side."""
-    z = signs.astype(np.uint64).copy()
-    z ^= z >> np.uint64(30)
-    z *= _MIX1
-    z ^= z >> np.uint64(27)
-    z *= _MIX2
-    z ^= z >> np.uint64(31)
-    return z
+def decode_signs(state_pdf: pd.DataFrame) -> np.ndarray:
+    """One bucket's state rows (zero or one ``(bucket, state)`` row, the
+    state possibly NULL for a never-written bucket) → its sorted uint64
+    sign array (empty when there is no state)."""
+    if len(state_pdf) and state_pdf["state"].iloc[0] is not None:
+        return np.frombuffer(bytes(state_pdf["state"].iloc[0]),
+                             dtype=np.uint64)
+    return np.zeros(0, dtype=np.uint64)
 
 
-# --------------------------------------------------------------------------
-# Exact path (the oracle)
-# --------------------------------------------------------------------------
+def contains(seen: np.ndarray, signs: np.ndarray) -> np.ndarray:
+    """Boolean mask: which of ``signs`` (uint64) are in the sorted
+    ``seen`` array."""
+    if not len(seen):
+        return np.zeros(len(signs), dtype=bool)
+    idx = np.clip(np.searchsorted(seen, signs), 0, len(seen) - 1)
+    return seen[idx] == signs
 
-def exact_unseen(candidates: DataFrame, seen: DataFrame,
-                 url_col: str = "url") -> DataFrame:
-    """J3: drop candidates present in the seen set (set_filter
-    --filt_out_in_dict, sort.sh:38-74) — plain left_anti equi-join, which
-    Catalyst/AQE executes broadcast- or sort-merge-side as sizes dictate."""
-    return candidates.join(
-        seen.select(url_col).distinct(), on=url_col, how="left_anti"
-    )
-
-
-# --------------------------------------------------------------------------
-# Bloom shards
-# --------------------------------------------------------------------------
 
 def _bucket_spread(df: DataFrame) -> DataFrame:
     """Pin the bucket shuffle feeding a cogrouped Arrow kernel to a fixed
@@ -98,183 +73,16 @@ def _bucket_spread(df: DataFrame) -> DataFrame:
     return df.repartition(n, "bucket")
 
 
-STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("bucket", T.IntegerType(), False),
-        T.StructField("state", T.BinaryType(), True),
-    ]
-)
-
-
-@dataclass(frozen=True)
-class BloomSpec:
-    """Per-shard sizing. ``capacity`` is expected URLs per shard; bits and
-    hash count follow the standard optimum m = -n ln p / ln2², k = m/n ln2."""
-
-    capacity: int = 100_000
-    fpp: float = 0.003
-
-    @property
-    def n_bits(self) -> int:
-        m = -self.capacity * math.log(self.fpp) / (math.log(2) ** 2)
-        return max(64, int(m) + 7) // 8 * 8  # byte-aligned
-
-    @property
-    def n_hashes(self) -> int:
-        return max(1, round(self.n_bits / self.capacity * math.log(2)))
-
-
-class BloomShards:
-    """Partitioned Bloom-filter URL-seen set.
-
-    State lives in a ``(bucket, state)`` DataFrame the caller checkpoints;
-    this class is stateless glue producing the cogrouped-applyInPandas plans.
-    """
-
-    def __init__(self, spec: BloomSpec = BloomSpec()):
-        self.spec = spec
-
-    # -- numpy kernels (vectorized over the whole Arrow batch) -------------
-
-    def _positions(self, signs: np.ndarray) -> np.ndarray:
-        """(len(signs), k) bit positions: h1 + i*h2 mod m (Kirsch-Mitzenmacher
-        double hashing)."""
-        m = np.uint64(self.spec.n_bits)
-        h1 = signs.astype(np.uint64)
-        h2 = _h2(h1) | np.uint64(1)
-        i = np.arange(self.spec.n_hashes, dtype=np.uint64)[None, :]
-        return ((h1[:, None] + i * h2[:, None]) % m).astype(np.int64)
-
-    def _probe_bits(self, bits: np.ndarray, signs: np.ndarray) -> np.ndarray:
-        pos = self._positions(signs)
-        byte_idx, bit_idx = pos >> 3, pos & 7
-        hit = (bits[byte_idx] >> bit_idx) & 1
-        return hit.all(axis=1)
-
-    def _set_bits(self, bits: np.ndarray, signs: np.ndarray) -> None:
-        pos = self._positions(signs).ravel()
-        np.bitwise_or.at(bits, pos >> 3, np.uint8(1) << (pos & 7).astype(np.uint8))
-
-    def _empty(self) -> np.ndarray:
-        return np.zeros(self.spec.n_bits // 8, dtype=np.uint8)
-
-    def _state_bits(self, state_pdf: pd.DataFrame) -> np.ndarray:
-        if len(state_pdf) and state_pdf["state"].iloc[0] is not None:
-            return np.frombuffer(
-                bytes(state_pdf["state"].iloc[0]), dtype=np.uint8
-            ).copy()
-        return self._empty()
-
-    # -- Spark plans --------------------------------------------------------
-
-    def probe(self, candidates: DataFrame, state: DataFrame) -> DataFrame:
-        """Mark candidates with ``maybe_seen``. ``candidates`` must carry
-        ``bucket:int`` and ``sign:long`` columns (urlkit.host_bucket /
-        url_sign64 — both computed JVM-side before the one shuffle here)."""
-        out_schema = T.StructType(
-            candidates.schema.fields
-            + [T.StructField("maybe_seen", T.BooleanType(), False)]
-        )
-        spec_probe = self._probe_bits
-        state_bits = self._state_bits
-
-        def fn(_key, cand_pdf: pd.DataFrame, state_pdf: pd.DataFrame) -> pd.DataFrame:
-            if not len(cand_pdf):
-                return cand_pdf.assign(maybe_seen=pd.Series([], dtype=bool))
-            bits = state_bits(state_pdf)
-            signs = cand_pdf["sign"].to_numpy()
-            cand_pdf = cand_pdf.copy()
-            cand_pdf["maybe_seen"] = spec_probe(bits, signs)
-            return cand_pdf
-
-        return (
-            _bucket_spread(candidates).groupBy("bucket")
-            .cogroup(_bucket_spread(state).groupBy("bucket"))
-            .applyInPandas(fn, schema=out_schema)
-        )
-
-    def update(self, admitted: DataFrame, state: DataFrame) -> DataFrame:
-        """Fold admitted URLs into the shards; returns the new full state
-        DataFrame (all buckets, including untouched ones)."""
-        set_bits = self._set_bits
-        state_bits = self._state_bits
-
-        def fn(key, adm_pdf: pd.DataFrame, state_pdf: pd.DataFrame) -> pd.DataFrame:
-            bits = state_bits(state_pdf)
-            if len(adm_pdf):
-                set_bits(bits, adm_pdf["sign"].to_numpy())
-            return pd.DataFrame(
-                {"bucket": [int(key[0])], "state": [bits.tobytes()]}
-            )
-
-        return (
-            _bucket_spread(admitted.select("bucket", "sign"))
-            .groupBy("bucket")
-            .cogroup(_bucket_spread(state).groupBy("bucket"))
-            .applyInPandas(fn, schema=STATE_SCHEMA)
-        )
-
-    def init_state(self, spark: SparkSession, n_buckets: int) -> DataFrame:
-        return spark.range(n_buckets).select(
-            F.col("id").cast("int").alias("bucket"),
-            F.lit(None).cast("binary").alias("state"),
-        )
-
-
-# --------------------------------------------------------------------------
-# Sign shards (exact, 8 B/url)
-# --------------------------------------------------------------------------
-
-
 class SignShards:
-    """Exact sign-keyed seen set: per bucket a SORTED numpy uint64 array of
-    url signs. This is the Spark rendering of the reference's Redis store
-    keyed by ``base::CalcUrlSign(url)``
-    (crawler/crawler2/general_crawler/url.proto:18-27, scheduler.cc:289-314)
-    — the 64-bit sign IS the identity there too, so hash-collision
-    semantics match the reference exactly and no false-positive confirm
-    join is needed (unlike Bloom).
-
-    Cost: 8 B/url — 80 GB for 10^10 URLs, ~1.2 MB/bucket over 65k
-    sign-keyed buckets, each co-resident with its bucket's candidates.
-    Probe = np.isin against the sorted array (vectorized binary search);
-    update = sorted merge. Deletion is supported (recrawl TTL) by plain
-    set difference.
-    """
-
-    def probe(self, candidates: DataFrame, state: DataFrame) -> DataFrame:
-        out_schema = T.StructType(
-            candidates.schema.fields
-            + [T.StructField("maybe_seen", T.BooleanType(), False)]
-        )
-
-        def fn(_key, cand_pdf: pd.DataFrame, state_pdf: pd.DataFrame):
-            if not len(cand_pdf):
-                return cand_pdf.assign(maybe_seen=pd.Series([], dtype=bool))
-            if len(state_pdf) and state_pdf["state"].iloc[0] is not None:
-                seen = np.frombuffer(
-                    bytes(state_pdf["state"].iloc[0]), dtype=np.uint64
-                )
-            else:
-                seen = np.zeros(0, dtype=np.uint64)
-            cand_pdf = cand_pdf.copy()
-            signs = cand_pdf["sign"].to_numpy().astype(np.uint64)
-            idx = np.searchsorted(seen, signs)
-            idx = np.clip(idx, 0, max(len(seen) - 1, 0))
-            cand_pdf["maybe_seen"] = (
-                seen[idx] == signs if len(seen)
-                else np.zeros(len(signs), dtype=bool)
-            )
-            return cand_pdf
-
-        return (
-            _bucket_spread(candidates).groupBy("bucket")
-            .cogroup(_bucket_spread(state).groupBy("bucket"))
-            .applyInPandas(fn, schema=out_schema)
-        )
+    """Exact seen set of 64-bit url signs. Stateless glue: state lives in the
+    ``(bucket, state)`` DataFrame the caller checkpoints. Probing runs
+    inside the fused probe+admit stage (fused.py)."""
 
     def update(self, admitted: DataFrame, state: DataFrame,
                deletes: DataFrame | None = None) -> DataFrame:
+        """Fold ``admitted`` (bucket, sign) rows into the shards and drop
+        ``deletes`` (bucket, sign) rows; returns the new full state
+        DataFrame (all buckets, including untouched ones)."""
         spark = admitted.sparkSession
         dels = (
             deletes
@@ -286,12 +94,7 @@ class SignShards:
         combined = adds.unionByName(dels)
 
         def fn(key, pdf: pd.DataFrame, state_pdf: pd.DataFrame):
-            if len(state_pdf) and state_pdf["state"].iloc[0] is not None:
-                seen = np.frombuffer(
-                    bytes(state_pdf["state"].iloc[0]), dtype=np.uint64
-                )
-            else:
-                seen = np.zeros(0, dtype=np.uint64)
+            seen = decode_signs(state_pdf)
             add = pdf.loc[~pdf["is_delete"], "sign"].to_numpy().astype(np.uint64)
             merged = np.union1d(seen, add)
             d = pdf.loc[pdf["is_delete"], "sign"].to_numpy().astype(np.uint64)
@@ -299,162 +102,6 @@ class SignShards:
                 merged = np.setdiff1d(merged, d, assume_unique=False)
             return pd.DataFrame(
                 {"bucket": [int(key[0])], "state": [merged.tobytes()]}
-            )
-
-        return (
-            _bucket_spread(combined).groupBy("bucket")
-            .cogroup(_bucket_spread(state).groupBy("bucket"))
-            .applyInPandas(fn, schema=STATE_SCHEMA)
-        )
-
-    def init_state(self, spark: SparkSession, n_buckets: int) -> DataFrame:
-        return spark.range(n_buckets).select(
-            F.col("id").cast("int").alias("bucket"),
-            F.lit(None).cast("binary").alias("state"),
-        )
-
-
-# --------------------------------------------------------------------------
-# Cuckoo shards (deletable)
-# --------------------------------------------------------------------------
-
-@dataclass(frozen=True)
-class CuckooSpec:
-    """Cuckoo filter per shard: ``n_buckets_pow2`` buckets × 4 slots of
-    16-bit fingerprints (load ≤ ~0.95 with kicks). Supports delete —
-    required for recrawl-TTL expiry and linkbase ``D`` commands."""
-
-    n_buckets_pow2: int = 1 << 15  # 32768 buckets * 4 slots = 131072 slots
-    max_kicks: int = 200
-
-
-class CuckooShards:
-    """Same sharded-state layout as BloomShards but with a cuckoo table,
-    trading ~2× memory for deletability. Insert fast-path is vectorized;
-    only eviction chains (rare below 90% load) loop per item."""
-
-    def __init__(self, spec: CuckooSpec = CuckooSpec()):
-        self.spec = spec
-
-    # state layout: uint16 array shape (n_buckets, 4); 0 = empty slot
-    def _empty(self) -> np.ndarray:
-        return np.zeros((self.spec.n_buckets_pow2, 4), dtype=np.uint16)
-
-    def _decode(self, state_pdf: pd.DataFrame) -> np.ndarray:
-        if len(state_pdf) and state_pdf["state"].iloc[0] is not None:
-            return (
-                np.frombuffer(bytes(state_pdf["state"].iloc[0]), dtype=np.uint16)
-                .reshape(self.spec.n_buckets_pow2, 4)
-                .copy()
-            )
-        return self._empty()
-
-    def _fp_and_buckets(self, signs: np.ndarray):
-        mask = np.uint64(self.spec.n_buckets_pow2 - 1)
-        h = signs.astype(np.uint64)
-        fp = ((h >> np.uint64(48)) | np.uint64(1)).astype(np.uint16)  # never 0
-        b1 = (h & mask).astype(np.int64)
-        b2 = (b1 ^ (_h2(fp.astype(np.uint64)) & mask).astype(np.int64))
-        return fp, b1, b2
-
-    def _contains(self, table: np.ndarray, signs: np.ndarray) -> np.ndarray:
-        fp, b1, b2 = self._fp_and_buckets(signs)
-        return ((table[b1] == fp[:, None]).any(axis=1)
-                | (table[b2] == fp[:, None]).any(axis=1))
-
-    def _insert(self, table: np.ndarray, signs: np.ndarray) -> None:
-        fp, b1, b2 = self._fp_and_buckets(signs)
-        present = self._contains(table, signs)
-        rng_state = np.uint64(0x9E3779B97F4A7C15)
-        for j in np.nonzero(~present)[0]:
-            f, c1, c2 = int(fp[j]), int(b1[j]), int(b2[j])
-            placed = False
-            for c in (c1, c2):
-                empty = np.nonzero(table[c] == 0)[0]
-                if len(empty):
-                    table[c, empty[0]] = f
-                    placed = True
-                    break
-            if placed:
-                continue
-            # eviction chain, deterministic slot choice (no rand(); the
-            # reference's random choices are made deterministic per §4)
-            cur = c1
-            for kick in range(self.spec.max_kicks):
-                slot = (f + kick) & 3
-                f, table[cur, slot] = int(table[cur, slot]), f
-                mask = self.spec.n_buckets_pow2 - 1
-                cur = cur ^ int(_h2(np.array([f], dtype=np.uint64))[0]) & mask
-                empty = np.nonzero(table[cur] == 0)[0]
-                if len(empty):
-                    table[cur, empty[0]] = f
-                    break
-            else:
-                raise RuntimeError(
-                    "cuckoo shard over capacity — resize n_buckets_pow2"
-                )
-
-    def _delete(self, table: np.ndarray, signs: np.ndarray) -> None:
-        fp, b1, b2 = self._fp_and_buckets(signs)
-        for j in range(len(fp)):
-            f = fp[j]
-            for c in (b1[j], b2[j]):
-                hit = np.nonzero(table[c] == f)[0]
-                if len(hit):
-                    table[c, hit[0]] = 0
-                    break
-
-    # -- Spark plans (same shapes as BloomShards) ---------------------------
-
-    def probe(self, candidates: DataFrame, state: DataFrame) -> DataFrame:
-        out_schema = T.StructType(
-            candidates.schema.fields
-            + [T.StructField("maybe_seen", T.BooleanType(), False)]
-        )
-        contains, decode = self._contains, self._decode
-
-        def fn(_key, cand_pdf, state_pdf):
-            if not len(cand_pdf):
-                return cand_pdf.assign(maybe_seen=pd.Series([], dtype=bool))
-            table = decode(state_pdf)
-            cand_pdf = cand_pdf.copy()
-            cand_pdf["maybe_seen"] = contains(
-                table, cand_pdf["sign"].to_numpy()
-            )
-            return cand_pdf
-
-        return (
-            _bucket_spread(candidates).groupBy("bucket")
-            .cogroup(_bucket_spread(state).groupBy("bucket"))
-            .applyInPandas(fn, schema=out_schema)
-        )
-
-    def update(self, admitted: DataFrame, state: DataFrame,
-               deletes: DataFrame | None = None) -> DataFrame:
-        """Insert admitted signs; optionally delete expired ones first.
-        ``deletes`` rows need (bucket, sign)."""
-        insert, delete, decode = self._insert, self._delete, self._decode
-        spark = admitted.sparkSession
-        dels = (
-            deletes
-            if deletes is not None
-            else spark.createDataFrame([], "bucket int, sign long")
-        ).select("bucket", "sign", F.lit(True).alias("is_delete"))
-        adds = admitted.select(
-            "bucket", "sign", F.lit(False).alias("is_delete")
-        )
-        combined = adds.unionByName(dels)
-
-        def fn(key, pdf, state_pdf):
-            table = decode(state_pdf)
-            d = pdf[pdf["is_delete"]]
-            if len(d):
-                delete(table, d["sign"].to_numpy())
-            a = pdf[~pdf["is_delete"]]
-            if len(a):
-                insert(table, a["sign"].to_numpy())
-            return pd.DataFrame(
-                {"bucket": [int(key[0])], "state": [table.tobytes()]}
             )
 
         return (

@@ -202,18 +202,6 @@ def host_bucket(host: Column, n_buckets: int) -> Column:
     return F.pmod(F.xxhash64(host), F.lit(n_buckets)).cast("int")
 
 
-def salted_bucket(host: Column, url: Column, n_buckets: int, n_salt: int,
-                  big_hosts: Column) -> Column:
-    """Skew-salted bucket: big hosts (robots/data_prepare.cc:86-135 pattern,
-    made deterministic) spread over ``n_salt`` sub-buckets keyed by url hash;
-    normal hosts keep pure host affinity."""
-    base = F.pmod(F.xxhash64(host), F.lit(n_buckets))
-    salt = F.when(big_hosts, F.pmod(F.xxhash64(url), F.lit(n_salt))).otherwise(
-        F.lit(0)
-    )
-    return F.pmod(base * n_salt + salt, F.lit(n_buckets * n_salt)).cast("int")
-
-
 # --------------------------------------------------------------------------
 # Host reversal & domain split
 # --------------------------------------------------------------------------

@@ -1,10 +1,9 @@
-"""Robots gating + per-host admission + holdon state (L1/L6/J2 semantics,
+"""Robots gating + holdon state + per-ip admission cap (L1/L6/J2 semantics,
 load_controller.cc:149-242 at batch granularity)."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from spider_spark import politeness as pol
 
@@ -61,46 +60,6 @@ def test_robots_disallow_prefix(spark, robots):
     assert got["http://host7.example.com/p/2"] == 3    # explicit allow
 
 
-def test_admit_round_budget_and_order(spark):
-    spec = pol.PolitenessSpec(qps=1.0, round_seconds=2.0)  # budget 2
-    rows = [
-        ("http://a.com/%d" % i, "a.com", 30, float(100 - i)) for i in range(5)
-    ] + [("http://b.com/0", "b.com", 30, 50.0)]
-    cand = spark.createDataFrame(
-        rows, "url string, host string, priority int, score double"
-    )
-    state = pol.init_host_state(spark)
-    out = pol.admit_round(cand, state, None, spec, round_no=0)
-    admitted = sorted(
-        r["url"] for r in out.filter(F.col("admitted")).collect()
-    )
-    # a.com: top-2 by (priority, score desc) = /0, /1; b.com under budget
-    assert admitted == ["http://a.com/0", "http://a.com/1", "http://b.com/0"]
-
-
-def test_admit_round_respects_holdon_and_drop(spark):
-    spec = pol.PolitenessSpec()
-    cand = spark.createDataFrame(
-        [
-            ("http://h.com/1", "h.com", 30, 1.0),
-            ("http://d.com/1", "d.com", 30, 1.0),
-            ("http://ok.com/1", "ok.com", 30, 1.0),
-        ],
-        "url string, host string, priority int, score double",
-    )
-    state = spark.createDataFrame(
-        [("h.com", 10, 5, False), ("d.com", 100, -1, True)],
-        pol.HOST_STATE_SCHEMA,
-    )
-    out = pol.admit_round(cand, state, None, spec, round_no=3)
-    admitted = {r["url"] for r in out.filter(F.col("admitted")).collect()}
-    assert admitted == {"http://ok.com/1"}  # h holding on till 5, d dropped
-    # after the holdon expires the host admits again
-    out2 = pol.admit_round(cand, state, None, spec, round_no=6)
-    admitted2 = {r["url"] for r in out2.filter(F.col("admitted")).collect()}
-    assert admitted2 == {"http://ok.com/1", "http://h.com/1"}
-
-
 def test_update_host_state(spark):
     spec = pol.PolitenessSpec(holdon_failures=3, holdon_rounds=2,
                               max_failed_times=6)
@@ -124,40 +83,6 @@ def test_update_host_state(spark):
     d2 = {r["host"]: r.asDict() for r in st2.collect()}
     assert d2["f.com"]["consec_failures"] == 6
     assert d2["f.com"]["dropped"]
-
-
-def test_salted_admission_equals_unsalted(spark):
-    """Two-level salted top-k (skew guard) must admit exactly the same
-    set as the single-window path — differential over a mega-host."""
-    rows = [
-        ("http://mega.com/%04d" % i, "mega.com", 30 + (i % 3) * 10,
-         float(1000 - i)) for i in range(500)
-    ] + [("http://tiny.com/%d" % i, "tiny.com", 30, 10.0) for i in range(3)]
-    cand = spark.createDataFrame(
-        rows, "url string, host string, priority int, score double"
-    )
-    state = pol.init_host_state(spark)
-    spec_salted = pol.PolitenessSpec(qps=2.0, round_seconds=5.0,
-                                     salt_buckets=16)
-    spec_plain = pol.PolitenessSpec(qps=2.0, round_seconds=5.0,
-                                    salt_buckets=1)
-    a = {r["url"] for r in pol.admit_round(cand, state, None, spec_salted, 0)
-         .filter(F.col("admitted")).collect()}
-    b = {r["url"] for r in pol.admit_round(cand, state, None, spec_plain, 0)
-         .filter(F.col("admitted")).collect()}
-    assert a == b
-    assert len(a) == 10 + 3  # budget 10 for mega + all 3 tiny
-
-
-def test_per_host_budget_dim(spark):
-    spec = pol.PolitenessSpec(qps=1.0, round_seconds=1.0)  # default 1
-    cand = spark.createDataFrame(
-        [("http://big.com/%d" % i, "big.com", 30, 1.0) for i in range(10)],
-        "url string, host string, priority int, score double",
-    )
-    budgets = spark.createDataFrame([("big.com", 5)], "host string, budget int")
-    out = pol.admit_round(cand, pol.init_host_state(spark), budgets, spec, 0)
-    assert out.filter(F.col("admitted")).count() == 5
 
 
 def test_ip_cap_null_ips_bypass_window(spark):

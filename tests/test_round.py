@@ -9,19 +9,11 @@ import collections
 import pytest
 from pyspark.sql import functions as F
 
+from crawl_witness import WitnessRun, batches
 from spider_spark import simulator as sim
 from spider_spark.politeness import PolitenessSpec, synthetic_robots
-from spider_spark.round import CrawlRun
-from spider_spark.round import RoundSpec as _RoundSpec
+from spider_spark.round import CrawlRun, RoundSpec
 from spider_spark.spans import WebSpec, extract_outlinks, generate_documents
-
-
-def RoundSpec(**kw):
-    """Tests opt INTO the driver-side ordering witness (the library
-    default is False — a production round must never collect; these
-    simulator-lockstep tests compare the per-round admitted batches)."""
-    kw.setdefault("collect_ordering", True)
-    return _RoundSpec(**kw)
 
 SPEC = WebSpec(n_hosts=10, pages_per_host=4, skew_hosts=2, skew_pages=16,
                links_per_page=3)
@@ -49,13 +41,9 @@ def world(spark):
 def spark_result(spark, world, tmp_path_factory):
     docs, robots, _, _ = world
     ck = str(tmp_path_factory.mktemp("ck"))
-    run = CrawlRun(spark, docs, robots, ck, RSPEC)
+    run = WitnessRun(spark, docs, robots, ck, RSPEC)
     seeds_df = spark.createDataFrame([(u,) for u in SEEDS], "url string")
-    res = run.run(seeds_df)
-    rounds = [r["admitted_urls"] for r in res]
-    while rounds and not rounds[-1]:
-        rounds.pop()
-    return run, rounds
+    return run, batches(run.run(seeds_df))
 
 
 @pytest.fixture(scope="module")
@@ -68,39 +56,18 @@ def sim_result(world):
     )
 
 
-def test_crawl_ordering_matches_simulator(spark_result, sim_result):
+def test_crawl_ordering_matches_simulator(spark, spark_result, sim_result):
     _, rounds = spark_result
     assert rounds == sim_result["rounds"]
+    # the per-round caches are built with columnar compression off; the
+    # session default, which the adjacency cache uses, is restored
+    assert spark.conf.get(
+        "spark.sql.inMemoryColumnarStorage.compressed") == "true"
 
 
 def test_seen_set_matches_simulator(spark_result, sim_result):
     run, _ = spark_result
     assert run.seen_urls() == sim_result["seen"]
-
-
-def test_round_cache_compression_knob(spark, world, sim_result,
-                                      tmp_path_factory):
-    """compress_round_caches must not change any crawl output, and the
-    helper must restore the session's columnar-compression conf (the
-    corpus-scale adjacency cache and user queries rely on the session
-    default) even though the per-round caches are built with it off."""
-    docs, robots, _, _ = world
-    key = "spark.sql.inMemoryColumnarStorage.compressed"
-    assert spark.conf.get(key) == "true"
-    for compress in (False, True):
-        ck = str(tmp_path_factory.mktemp(f"ck_comp_{compress}"))
-        run = CrawlRun(
-            spark, docs, robots, ck,
-            RoundSpec(n_buckets=8, max_depth=3, max_rounds=10,
-                      politeness=PSPEC, compress_round_caches=compress),
-        )
-        seeds_df = spark.createDataFrame([(u,) for u in SEEDS], "url string")
-        res = run.run(seeds_df)
-        rounds = [r["admitted_urls"] for r in res]
-        while rounds and not rounds[-1]:
-            rounds.pop()
-        assert rounds == sim_result["rounds"]
-        assert spark.conf.get(key) == "true"  # restored either way
 
 
 def test_resume_from_checkpoint(spark, world, tmp_path_factory):
@@ -130,24 +97,6 @@ def test_resume_from_checkpoint(spark, world, tmp_path_factory):
     assert run2.seen_urls() == ref["seen"]
 
 
-def test_sign_mode_matches_simulator(spark, world, sim_result,
-                                     tmp_path_factory):
-    """seen_mode='sign' (exact sign shards, no confirm join) must produce
-    the same rounds + seen set as the Bloom path and the simulator."""
-    docs, robots, _, _ = world
-    ck = str(tmp_path_factory.mktemp("ck_sign"))
-    spec = RoundSpec(n_buckets=8, max_depth=3, max_rounds=10,
-                     politeness=PSPEC, seen_mode="sign")
-    run = CrawlRun(spark, docs, robots, ck, spec)
-    seeds_df = spark.createDataFrame([(u,) for u in SEEDS], "url string")
-    res = run.run(seeds_df)
-    rounds = [r["admitted_urls"] for r in res]
-    while rounds and not rounds[-1]:
-        rounds.pop()
-    assert rounds == sim_result["rounds"]
-    assert run.seen_urls() == sim_result["seen"]
-
-
 def test_failures_and_budgets_match_simulator(spark, world,
                                               tmp_path_factory):
     """E2E with fetch FAILURES (seeds pointing at nonexistent pages →
@@ -165,11 +114,9 @@ def test_failures_and_budgets_match_simulator(spark, world,
     rspec = RoundSpec(n_buckets=8, max_depth=2, max_rounds=12,
                       politeness=pspec)
     ck = str(tmp_path_factory.mktemp("ck_fail"))
-    run = CrawlRun(spark, docs, robots, ck, rspec, budgets=budgets)
-    res = run.run(spark.createDataFrame([(u,) for u in seeds], "url string"))
-    rounds = [r["admitted_urls"] for r in res]
-    while rounds and not rounds[-1]:
-        rounds.pop()
+    run = WitnessRun(spark, docs, robots, ck, rspec, budgets=budgets)
+    rounds = batches(run.run(
+        spark.createDataFrame([(u,) for u in seeds], "url string")))
 
     simout = sim.simulate(
         seeds, adj, rob,
@@ -179,24 +126,6 @@ def test_failures_and_budgets_match_simulator(spark, world,
     )
     assert rounds == simout["rounds"]
     assert run.seen_urls() == simout["seen"]
-
-
-def test_fused_mode_matches_simulator(spark, world, sim_result,
-                                      tmp_path_factory):
-    """Fused probe+admission (one cogrouped stage) must reproduce the
-    simulator's rounds + seen set exactly — differential vs the window
-    path via the shared sim oracle."""
-    docs, robots, _, _ = world
-    ck = str(tmp_path_factory.mktemp("ck_fused"))
-    spec = RoundSpec(n_buckets=8, max_depth=3, max_rounds=10,
-                     politeness=PSPEC, seen_mode="sign", fused=True)
-    run = CrawlRun(spark, docs, robots, ck, spec)
-    res = run.run(spark.createDataFrame([(u,) for u in SEEDS], "url string"))
-    rounds = [r["admitted_urls"] for r in res]
-    while rounds and not rounds[-1]:
-        rounds.pop()
-    assert rounds == sim_result["rounds"]
-    assert run.seen_urls() == sim_result["seen"]
 
 
 def test_span_invariant_through_pipeline(spark, world):
@@ -215,20 +144,68 @@ def test_span_invariant_through_pipeline(spark, world):
     assert after.exceptAll(before).count() == 0
 
 
-def test_resume_spec_mismatch_fails_fast(spark, world, tmp_path_factory):
-    """Resuming a checkpoint under a different state-layout spec (seen_mode/
-    fused/n_buckets) must fail fast — mismatched bucket keys would silently
-    miss every seen probe."""
+@pytest.fixture(scope="module")
+def one_round_ckpt(spark, world, tmp_path_factory):
+    """A checkpoint with round 0 committed under n_buckets=8."""
     docs, robots, _, _ = world
-    ck = str(tmp_path_factory.mktemp("ck_mismatch"))
-    short = RoundSpec(n_buckets=8, max_depth=2, max_rounds=1, politeness=PSPEC)
-    seeds_df = spark.createDataFrame([(u,) for u in SEEDS], "url string")
-    CrawlRun(spark, docs, robots, ck, short).run(seeds_df)
+    ck = str(tmp_path_factory.mktemp("ck_layout"))
+    spec = RoundSpec(n_buckets=8, max_depth=2, max_rounds=1, politeness=PSPEC)
+    CrawlRun(spark, docs, robots, ck, spec).run(
+        spark.createDataFrame([(u,) for u in SEEDS], "url string"))
+    return ck
 
-    other = RoundSpec(n_buckets=8, max_depth=2, max_rounds=4,
-                      politeness=PSPEC, seen_mode="bloom", fused=False)
-    with pytest.raises(ValueError, match="state-layout"):
-        CrawlRun(spark, docs, robots, ck, other).run(seeds_df, resume=True)
+
+def _set_spec(**kv):
+    def mutate(m):
+        m["spec"].update(kv)
+    return mutate
+
+
+def _drop_spec(m):
+    del m["spec"]
+
+
+def _parent_default_spec(m):
+    m["spec"] = {"seen_mode": "sign", "fused": True, "n_buckets": 8}
+
+
+@pytest.mark.parametrize("mutate,n_buckets,resumes", [
+    (None, 16, False),                           # bucket count changed
+    (_set_spec(seen_mode="bloom"), 8, False),    # former Bloom layout
+    (_set_spec(fused=False), 8, False),          # former sign-keyed buckets
+    (_drop_spec, 8, False),                      # no recorded layout
+    (_parent_default_spec, 8, True),             # default layout: resumes
+], ids=["n_buckets", "bloom", "unfused", "no_spec", "default"])
+def test_resume_state_layout_guard(spark, world, one_round_ckpt, tmp_path,
+                                   mutate, n_buckets, resumes):
+    """Resume validates the state layout the round-0 manifest records: a
+    mismatch would probe seen_state under the wrong bucket keys and
+    silently miss every seen url, so it must fail fast. A checkpoint
+    written under the default layout (the only one left) resumes."""
+    import json
+    import os
+    import shutil
+
+    docs, robots, _, _ = world
+    ck = str(tmp_path / "ck")
+    shutil.copytree(one_round_ckpt, ck)
+    mf = os.path.join(ck, "round=0000", "manifest.json")
+    if mutate is not None:
+        with open(mf) as f:
+            m = json.load(f)
+        mutate(m)
+        with open(mf, "w") as f:
+            json.dump(m, f)
+    spec = RoundSpec(n_buckets=n_buckets, max_depth=2, max_rounds=2,
+                     politeness=PSPEC)
+    run = CrawlRun(spark, docs, robots, ck, spec)
+    seeds_df = spark.createDataFrame([(u,) for u in SEEDS], "url string")
+    if resumes:
+        assert [r["round"] for r in run.run(seeds_df, resume=True)] == [1]
+        assert run.last_committed_round() == 2
+    else:
+        with pytest.raises(ValueError, match="state-layout"):
+            run.run(seeds_df, resume=True)
 
 
 def test_seen_urls_ignores_uncommitted_delta(spark, world, tmp_path_factory):
@@ -282,19 +259,15 @@ def _sim_robots_allow(hosts: list[str]) -> sim.SimRobots:
 
 
 def _run_engine(spark, docs, robots, ck, rspec, seeds, signals=None):
-    run = CrawlRun(spark, docs, robots, ck, rspec, signals=signals)
-    res = run.run(spark.createDataFrame([(u,) for u in seeds], "url string"))
-    rounds = [r["admitted_urls"] for r in res]
-    while rounds and not rounds[-1]:
-        rounds.pop()
-    return run, rounds
+    run = WitnessRun(spark, docs, robots, ck, rspec, signals=signals)
+    return run, batches(run.run(
+        spark.createDataFrame([(u,) for u in seeds], "url string")))
 
 
-@pytest.mark.parametrize("mode", ["bloom", "sign", "fused"])
-def test_vip_homepage_refresh_matches_simulator(spark, tmp_path_factory, mode):
+def test_vip_homepage_refresh_matches_simulator(spark, tmp_path_factory):
     """J4 VIP override (mr_selector_r1_reducer.cc:62-108): a homepage
     rediscovered after being crawled is re-admitted (seen-drop bypass);
-    plain pages are not. All three probe paths, twinned by the simulator."""
+    plain pages are not. Twinned by the simulator."""
     home = "http://a.example.com/"
     p1, p2 = "http://a.example.com/p/1", "http://a.example.com/p/2"
     adj = {home: [p1, p2], p1: [home, p2], p2: [home, p1]}
@@ -303,10 +276,8 @@ def test_vip_homepage_refresh_matches_simulator(spark, tmp_path_factory, mode):
     rspec = RoundSpec(
         n_buckets=4, max_depth=4, max_rounds=6,
         politeness=PolitenessSpec(qps=1.0, round_seconds=5.0),
-        seen_mode="sign" if mode in ("sign", "fused") else "bloom",
-        fused=(mode == "fused"),
     )
-    ck = str(tmp_path_factory.mktemp(f"ck_vip_{mode}"))
+    ck = str(tmp_path_factory.mktemp("ck_vip"))
     _, rounds = _run_engine(spark, docs, robots, ck, rspec, [home])
 
     simout = sim.simulate(
@@ -380,12 +351,9 @@ def test_per_ip_cap_matches_simulator(spark, tmp_path_factory):
         politeness=PolitenessSpec(qps=1.0, round_seconds=3.0),  # 3/host
     )
     ck = str(tmp_path_factory.mktemp("ck_ipcap"))
-    run = CrawlRun(spark, docs, robots, ck, rspec,
-                   host_ips=host_ips, ip_budgets=ip_budgets)
-    res = run.run(spark.createDataFrame([(seed,)], "url string"))
-    rounds = [r["admitted_urls"] for r in res]
-    while rounds and not rounds[-1]:
-        rounds.pop()
+    run = WitnessRun(spark, docs, robots, ck, rspec,
+                     host_ips=host_ips, ip_budgets=ip_budgets)
+    rounds = batches(run.run(spark.createDataFrame([(seed,)], "url string")))
 
     simout = sim.simulate(
         [seed], adj, _sim_robots_allow(hosts),
@@ -511,17 +479,15 @@ def test_kitchen_sink_composition_matches_simulator(spark, tmp_path_factory):
         recrawl_ttl_rounds=4,
     )
     ck = str(tmp_path_factory.mktemp("ck_sink"))
-    run = CrawlRun(
+    run = WitnessRun(
         spark, docs, robots, ck, rspec,
         budgets=spark.createDataFrame(budgets_rows, "host string, budget int"),
         signals=spark.createDataFrame(list(uv.items()), "url string, uv double"),
         host_ips=spark.createDataFrame(list(host_ips.items()), "host string, ip string"),
         ip_budgets=spark.createDataFrame(list(ip_budgets.items()), "ip string, budget int"),
     )
-    res = run.run(spark.createDataFrame([(u,) for u in seeds], "url string"))
-    rounds = [r["admitted_urls"] for r in res]
-    while rounds and not rounds[-1]:
-        rounds.pop()
+    rounds = batches(run.run(
+        spark.createDataFrame([(u,) for u in seeds], "url string")))
 
     simout = sim.simulate(
         seeds, adj, _sim_robots_allow(hosts),
@@ -564,7 +530,7 @@ def test_linkbase_compaction_preserves_crawl(spark, tmp_path_factory):
 
     ck = str(tmp_path_factory.mktemp("ck_compact"))
     seeds_df = spark.createDataFrame([(s,)], "url string")
-    run1 = CrawlRun(spark, docs, robots, ck, spec(5))
+    run1 = WitnessRun(spark, docs, robots, ck, spec(5))
     res1 = run1.run(seeds_df)
 
     met = run1.compact_linkbase()
@@ -596,11 +562,8 @@ def test_linkbase_compaction_preserves_crawl(spark, tmp_path_factory):
                     if _os.path.isdir(d) else [])
             assert [x["file"] for x in m["files"]["linkbase_delta"]] == want
 
-    run2 = CrawlRun(spark, docs, robots, ck, spec(7))
-    res2 = run2.run(seeds_df, resume=True)
-    rounds = [r["admitted_urls"] for r in res1 + res2]
-    while rounds and not rounds[-1]:
-        rounds.pop()
+    run2 = WitnessRun(spark, docs, robots, ck, spec(7))
+    rounds = batches(res1 + run2.run(seeds_df, resume=True))
 
     simout = sim.simulate(
         [s], adj, _sim_robots_allow(["rc.example.com"]),
@@ -843,37 +806,6 @@ def test_compaction_swap_crash_mid_rename(spark, tmp_path_factory,
     assert baseline_rows >= lb.count()
 
 
-def test_resume_pre_fingerprint_without_vip_raises(spark, world,
-                                                   tmp_path_factory):
-    """A pre-fingerprint checkpoint (manifest without 'spec') whose frontier
-    predates the vip column must fail resume with a descriptive error, not
-    an unresolved-column AnalysisException mid-round."""
-    import json
-    import os
-
-    docs, robots, _, _ = world
-    ck = str(tmp_path_factory.mktemp("ck_prefp"))
-    short = RoundSpec(n_buckets=8, max_depth=2, max_rounds=1, politeness=PSPEC)
-    seeds_df = spark.createDataFrame([(u,) for u in SEEDS], "url string")
-    run = CrawlRun(spark, docs, robots, ck, short)
-    run.run(seeds_df)
-    last = run.last_committed_round()
-    # rewrite the checkpoint as a legacy one: strip the fingerprint and the
-    # vip column from the live frontier
-    mf = os.path.join(ck, "round=0000", "manifest.json")
-    with open(mf) as f:
-        m = json.load(f)
-    m.pop("spec", None)
-    with open(mf, "w") as f:
-        json.dump(m, f)
-    fdir = os.path.join(ck, f"round={last:04d}", "frontier")
-    legacy = spark.read.parquet(fdir).drop("vip").cache()
-    legacy.count()
-    legacy.write.mode("overwrite").parquet(fdir)
-    with pytest.raises(ValueError, match="vip"):
-        CrawlRun(spark, docs, robots, ck, short).run(seeds_df, resume=True)
-
-
 def test_frontier_host_cap_lockstep_and_bounded(spark, world,
                                                 tmp_path_factory):
     """Per-host frontier cap (reducer_compress_control.cc:128-169): with a
@@ -888,11 +820,9 @@ def test_frontier_host_cap_lockstep_and_bounded(spark, world,
     ck = str(tmp_path_factory.mktemp("ck_cap"))
     spec = RoundSpec(n_buckets=8, max_depth=3, max_rounds=10,
                      politeness=PSPEC, frontier_host_cap=cap)
-    run = CrawlRun(spark, docs, robots, ck, spec)
-    res = run.run(spark.createDataFrame([(u,) for u in SEEDS], "url string"))
-    rounds = [r["admitted_urls"] for r in res]
-    while rounds and not rounds[-1]:
-        rounds.pop()
+    run = WitnessRun(spark, docs, robots, ck, spec)
+    rounds = batches(run.run(
+        spark.createDataFrame([(u,) for u in SEEDS], "url string")))
     want = sim.simulate(
         SEEDS, adj, rob,
         sim.SimSpec(default_budget=PSPEC.default_budget,
@@ -945,7 +875,7 @@ def test_updater_loop_closure_e2e(spark, tmp_path_factory):
     rspec = RoundSpec(n_buckets=4, max_depth=3, max_rounds=8,
                       politeness=PolitenessSpec(qps=1.0, round_seconds=5.0))
     ck = str(tmp_path_factory.mktemp("ck_upd"))
-    run = CrawlRun(spark, docs, robots, ck, rspec)
+    run = WitnessRun(spark, docs, robots, ck, rspec)
     seeds_df = spark.createDataFrame([(s,)], "url string")
     run.run(seeds_df)
     committed = run.last_committed_round()
@@ -961,7 +891,7 @@ def test_updater_loop_closure_e2e(spark, tmp_path_factory):
     assert n == 3
     res2 = run.run(seeds_df, resume=True)
     # the resumed round re-admits the seen pages
-    assert set(res2[0]["admitted_urls"]) == {s, a, b}
+    assert set(res2[0]["batch"]) == {s, a, b}
     # the linkbase now holds a NEWER record per url; compaction keeps it
     met = run.compact_linkbase()
     left = {r["url"]: r for r in run._linkbase(
@@ -1049,11 +979,8 @@ def test_extract_rules_twin_e2e(spark, tmp_path_factory):
     rspec = RoundSpec(n_buckets=4, max_depth=3, max_rounds=6,
                       politeness=PolitenessSpec(qps=1.0, round_seconds=5.0))
     ck = str(tmp_path_factory.mktemp("ck_xr"))
-    run = CrawlRun(spark, docs, robots, ck, rspec, extract_rules=rules)
-    res = run.run(spark.createDataFrame([(s,)], "url string"))
-    rounds = [r["admitted_urls"] for r in res]
-    while rounds and not rounds[-1]:
-        rounds.pop()
+    run = WitnessRun(spark, docs, robots, ck, rspec, extract_rules=rules)
+    rounds = batches(run.run(spark.createDataFrame([(s,)], "url string")))
     want = sim.simulate(
         [s], adj, _sim_robots_allow(["w1.example.com", "w2.example.com"]),
         sim.SimSpec(default_budget=5, max_depth=3, max_rounds=6,
@@ -1064,12 +991,10 @@ def test_extract_rules_twin_e2e(spark, tmp_path_factory):
     assert own in set(run.seen_urls())
 
 
-@pytest.mark.parametrize("fused", [True, False])
-def test_budget_time_windows_twin_e2e(spark, tmp_path_factory, fused):
+def test_budget_time_windows_twin_e2e(spark, tmp_path_factory):
     """Time-of-day budget windows (host_load_control.txt HH:MM-HH:MM,
     load_controller.cc:46-92): the host's budget flips between rounds as
-    the logical clock crosses window bounds; engine and simulator agree
-    in both fused and window admission modes."""
+    the logical clock crosses window bounds; engine and simulator agree."""
     host = "tw.example.com"
     s = f"http://{host}/p/0"
     pages = [f"http://{host}/p/{i}" for i in range(1, 9)]
@@ -1083,13 +1008,10 @@ def test_budget_time_windows_twin_e2e(spark, tmp_path_factory, fused):
         windows, "host string, begin_min int, end_min int, budget int"
     )
     rspec = RoundSpec(n_buckets=4, max_depth=2, max_rounds=8,
-                      politeness=pspec, fused=fused)
-    ck = str(tmp_path_factory.mktemp(f"ck_tw{int(fused)}"))
-    run = CrawlRun(spark, docs, robots, ck, rspec, budgets=budgets)
-    res = run.run(spark.createDataFrame([(s,)], "url string"))
-    rounds = [r["admitted_urls"] for r in res]
-    while rounds and not rounds[-1]:
-        rounds.pop()
+                      politeness=pspec)
+    ck = str(tmp_path_factory.mktemp("ck_tw"))
+    run = WitnessRun(spark, docs, robots, ck, rspec, budgets=budgets)
+    rounds = batches(run.run(spark.createDataFrame([(s,)], "url string")))
     want = sim.simulate(
         [s], adj, _sim_robots_allow([host]),
         sim.SimSpec(default_budget=pspec.default_budget,
@@ -1157,7 +1079,7 @@ def test_bootstrap_respects_frontier_host_cap(spark, tmp_path_factory):
                       politeness=PolitenessSpec(qps=1.0, round_seconds=2.0),
                       frontier_host_cap=4)
     ck = str(tmp_path_factory.mktemp("ck_bcap"))
-    run = CrawlRun(spark, docs, robots, ck, rspec)
+    run = WitnessRun(spark, docs, robots, ck, rspec)
     res = run.run(spark.createDataFrame([(p,) for p in pages], "url string"))
     import os
     f0 = spark.read.parquet(os.path.join(ck, "round=0000", "frontier"))
@@ -1168,10 +1090,7 @@ def test_bootstrap_respects_frontier_host_cap(spark, tmp_path_factory):
         sim.SimSpec(default_budget=2, max_depth=2, max_rounds=3,
                     frontier_host_cap=4),
     )
-    rounds = [r["admitted_urls"] for r in res]
-    while rounds and not rounds[-1]:
-        rounds.pop()
-    assert rounds == want["rounds"]
+    assert batches(res) == want["rounds"]
 
 
 def test_enqueue_crash_recovery(spark, tmp_path_factory):
@@ -1219,20 +1138,6 @@ def test_enqueue_crash_recovery(spark, tmp_path_factory):
     assert got == {"http://eq.example.com/bogus"}
     assert not os.path.exists(os.path.join(rdir, "_enqueue_pending.json"))
     assert not os.path.isdir(os.path.join(rdir, "_frontier_trash"))
-
-
-def test_collect_ordering_defaults_off(spark, tmp_path_factory):
-    """VERDICT r3 §1/§5: the LIBRARY default must not collect fetched urls
-    to the driver — admitted_urls stays empty unless a test opts in."""
-    s = "http://dflt.example.com/p/0"
-    docs = _mk_docs(spark, {s: []})
-    robots = _allow_all_robots(spark, ["dflt.example.com"])
-    ck = str(tmp_path_factory.mktemp("ck_dflt"))
-    run = CrawlRun(spark, docs, robots, ck,
-                   _RoundSpec(n_buckets=4, max_rounds=2, politeness=PSPEC))
-    res = run.run(spark.createDataFrame([(s,)], "url string"))
-    assert res[0]["admitted"] == 1
-    assert all(r["admitted_urls"] == [] for r in res)
 
 
 def test_enqueue_preserves_existing_depth(spark, tmp_path_factory):
@@ -1284,7 +1189,7 @@ def test_budget_window_validation_raises(spark, tmp_path_factory):
     with pytest.raises(ValueError, match="invalid budget windows"):
         CrawlRun(spark, docs, robots,
                  str(tmp_path_factory.mktemp("ck_bw")),
-                 _RoundSpec(n_buckets=4), budgets=bad)
+                 RoundSpec(n_buckets=4), budgets=bad)
     nullb = spark.createDataFrame(
         [("h.example.com", None, 120, 5)],
         "host string, begin_min int, end_min int, budget int",
@@ -1342,10 +1247,10 @@ def test_hub_dig_feeds_frontier_and_readmits_after_ttl(spark,
     rspec = RoundSpec(n_buckets=4, max_depth=3, max_rounds=3,
                       politeness=PolitenessSpec(qps=2.0, round_seconds=5.0),
                       recrawl_ttl_rounds=3)
-    run = CrawlRun(spark, docs, robots, ck, rspec)
+    run = WitnessRun(spark, docs, robots, ck, rspec)
     seeds = spark.createDataFrame([(hub,)], "url string")
     res1 = run.run(seeds)
-    assert res1[0]["admitted_urls"] == [hub]
+    assert res1[0]["batch"] == [hub]
     last = run.last_committed_round()
     hubs = run.hub_candidates(min_outlinks=3)
     assert [r["url"] for r in hubs.collect()] == [hub]
@@ -1356,12 +1261,42 @@ def test_hub_dig_feeds_frontier_and_readmits_after_ttl(spark,
     assert fr[hub] is False     # 'N' rides the frontier without VIP bypass
     # resume: the hub's seen-sign (crawled round 0) has TTL-expired by the
     # resumed round, so it re-admits — hub dig closes the loop
-    run2 = CrawlRun(spark, docs, robots, ck, _RoundSpec(
+    run2 = WitnessRun(spark, docs, robots, ck, RoundSpec(
         n_buckets=4, max_depth=3, max_rounds=last + 2,
         politeness=PolitenessSpec(qps=2.0, round_seconds=5.0),
-        recrawl_ttl_rounds=3, collect_ordering=True))
+        recrawl_ttl_rounds=3))
     res2 = run2.run(seeds, resume=True)
-    assert res2[0]["admitted_urls"] == [hub]
+    assert res2[0]["batch"] == [hub]
+
+
+def test_salted_host_cap_equals_unsalted(spark, tmp_path_factory):
+    """The host cap's two-level salted windows (skew guard) keep exactly
+    the rows of the single-window cut — differential over a mega-host,
+    salt_buckets 16 vs 1."""
+    rows = [
+        (f"http://mega.com/{i:04d}", "mega.com", i % 3, None, i % 7 == 0)
+        for i in range(500)
+    ] + [(f"http://tiny.com/{i}", "tiny.com", 0, None, False)
+         for i in range(3)]
+    frontier = spark.createDataFrame(
+        rows, "url string, host string, depth int, referer string, "
+              "vip boolean")
+    docs = _mk_docs(spark, {"http://tiny.com/0": []})
+    robots = _allow_all_robots(spark, ["tiny.com"])
+    kept = []
+    for n_salt in (16, 1):
+        run = CrawlRun(
+            spark, docs, robots, str(tmp_path_factory.mktemp("ck_salt")),
+            RoundSpec(n_buckets=4,
+                      politeness=PolitenessSpec(salt_buckets=n_salt)))
+        kept.append({r["url"] for r in
+                     run._cap_frontier(frontier, 10).collect()})
+    assert kept[0] == kept[1]
+    assert len(kept[0]) == 10 + 3  # cap 10 for mega + all 3 tiny
+    # order (vip desc, depth asc, url asc): 24 depth-0 VIPs outrank the
+    # rest, so the mega-host keeps the first 10 of them by url
+    assert {u for u in kept[0] if u.startswith("http://mega.")} == set(
+        sorted(u for u, _, d, _, v in rows if v and d == 0)[:10])
 
 
 def test_fused_bucket_group_bound_under_skew(spark, tmp_path_factory):

@@ -278,7 +278,8 @@ def test_crawl_round_drops_rule_book_urls(spark, tmp_path):
     the simulator twin (will_filter_py via sim.rule_filter) agrees."""
     from spider_spark import simulator as sim
     from spider_spark.politeness import PolitenessSpec
-    from spider_spark.round import CrawlRun, RoundSpec
+    from crawl_witness import WitnessRun, batches
+    from spider_spark.round import RoundSpec
 
     hosts = ("a.example.com", "b.example.com", "weibo.com")
     adj = {
@@ -307,14 +308,10 @@ def test_crawl_round_drops_rule_book_urls(spark, tmp_path):
         "disallow_prefixes array<string>",
     )
     spec = RoundSpec(n_buckets=4, max_depth=3, max_rounds=6,
-                     politeness=PolitenessSpec(qps=5.0, round_seconds=2.0),
-                     collect_ordering=True)
-    run = CrawlRun(spark, docs, robots, str(tmp_path / "ck"), spec)
-    res = run.run(spark.createDataFrame(
-        [("http://a.example.com/",)], "url string"))
-    engine_rounds = [r["admitted_urls"] for r in res]
-    while engine_rounds and not engine_rounds[-1]:
-        engine_rounds.pop()
+                     politeness=PolitenessSpec(qps=5.0, round_seconds=2.0))
+    run = WitnessRun(spark, docs, robots, str(tmp_path / "ck"), spec)
+    engine_rounds = batches(run.run(spark.createDataFrame(
+        [("http://a.example.com/",)], "url string")))
     s = sim.simulate(
         ["http://a.example.com/"],
         adj,

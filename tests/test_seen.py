@@ -1,20 +1,16 @@
-"""URL-seen layer: Bloom/cuckoo shards differential-tested against the
-exact anti-join oracle (SURVEY.md §5 test plan)."""
+"""URL-seen layer: exact sign shards (the reference's Redis CalcUrlSign
+store, scheduler.cc:289-314) — zero false positives, zero false
+negatives, deletion for the recrawl TTL."""
 
 from __future__ import annotations
 
 import numpy as np
-import pytest
+import pandas as pd
 from pyspark.sql import functions as F
 
-from spider_spark.seen import (
-    BloomShards,
-    BloomSpec,
-    CuckooShards,
-    CuckooSpec,
-    SignShards,
-    exact_unseen,
-)
+from spider_spark.fused import fused_probe_admit
+from spider_spark.politeness import init_host_state
+from spider_spark.seen import SignShards, contains, decode_signs
 
 N_BUCKETS = 4
 
@@ -32,81 +28,19 @@ def _with_keys(df):
     )
 
 
-def test_exact_unseen(spark):
-    cand = _urls(spark, 0, 100)
-    seen = _urls(spark, 50, 80)
-    out = exact_unseen(cand, seen)
-    assert out.count() == 70
-
-
-@pytest.mark.parametrize("shards_cls,spec", [
-    (BloomShards, BloomSpec(capacity=10_000, fpp=0.01)),
-    (CuckooShards, CuckooSpec(n_buckets_pow2=1 << 12)),
-])
-def test_filter_no_false_negatives(spark, shards_cls, spec):
-    """Everything inserted must probe as maybe_seen (zero false negatives),
-    and false positives on fresh keys stay below a loose bound."""
-    shards = shards_cls(spec)
-    inserted = _with_keys(_urls(spark, 0, 2000)).cache()
-    state = shards.init_state(spark, N_BUCKETS)
-    state = shards.update(inserted, state).cache()
-    state.count()
-
-    probed_in = shards.probe(inserted, state)
-    assert probed_in.filter(~F.col("maybe_seen")).count() == 0
-
-    fresh = _with_keys(_urls(spark, 10_000, 12_000, tag="v"))
-    fp = shards.probe(fresh, state).filter(F.col("maybe_seen")).count()
-    assert fp / 2000 < 0.05
-
-
-def test_bloom_differential_vs_exact(spark):
-    """Bloom-dedupe output ⊆ exact left_anti output, and the difference is
-    exactly the false positives (SURVEY.md §5 differential contract)."""
-    shards = BloomShards(BloomSpec(capacity=10_000, fpp=0.01))
-    seen = _with_keys(_urls(spark, 0, 1000)).cache()
-    cand = _with_keys(_urls(spark, 500, 1600)).cache()
-    state = shards.update(seen, shards.init_state(spark, N_BUCKETS)).cache()
-
-    bloom_unseen = shards.probe(cand, state).filter(
-        ~F.col("maybe_seen")
-    ).select("url")
-    exact = exact_unseen(cand, seen).select("url")
-    # no unseen URL reported by bloom that the exact path calls seen
-    assert bloom_unseen.exceptAll(exact).count() == 0
-
-
-def test_bloom_update_accumulates(spark):
-    shards = BloomShards(BloomSpec(capacity=1000, fpp=0.01))
-    state = shards.init_state(spark, N_BUCKETS)
-    a = _with_keys(_urls(spark, 0, 100)).cache()
-    b = _with_keys(_urls(spark, 100, 200)).cache()
-    state = shards.update(a, state).cache(); state.count()
-    state = shards.update(b, state).cache(); state.count()
-    both = a.unionByName(b)
-    assert shards.probe(both, state).filter(~F.col("maybe_seen")).count() == 0
-    # untouched buckets must still exist in the state table
-    assert state.count() == N_BUCKETS
-
-
-def test_cuckoo_delete_readmits(spark):
-    """Deletion support (recrawl-TTL / linkbase D commands,
-    mr_link_merge_reducer.cc:85-99): deleted signs probe unseen again."""
-    shards = CuckooShards(CuckooSpec(n_buckets_pow2=1 << 12))
-    rows = _with_keys(_urls(spark, 0, 500)).cache()
-    state = shards.update(rows, shards.init_state(spark, N_BUCKETS)).cache()
-    state.count()
-    dels = rows.limit(100).cache()
-    state2 = shards.update(
-        rows.sparkSession.createDataFrame([], "bucket int, sign long"),
-        state,
-        deletes=dels.select("bucket", "sign"),
-    ).cache()
-    state2.count()
-    out = shards.probe(dels, state2)
-    assert out.filter(F.col("maybe_seen")).count() == 0
-    kept = rows.join(dels.select("url"), "url", "left_anti")
-    assert shards.probe(kept, state2).filter(~F.col("maybe_seen")).count() == 0
+def _probe(cand, state):
+    """``maybe_seen`` per candidate, read from the fused probe+admit stage
+    (the only probe path) with a budget above the row count, so admission
+    never binds."""
+    frontier = cand.select(
+        "url", F.lit("h.x.com").alias("host"), F.lit(0).alias("depth"),
+        F.lit(None).cast("string").alias("referer"),
+        F.lit(False).alias("vip"), "sign", "bucket",
+        F.lit(1.0).alias("score"), F.lit(0).alias("priority"),
+    )
+    return fused_probe_admit(frontier, state,
+                             init_host_state(cand.sparkSession), None,
+                             default_budget=1_000_000, round_no=0)
 
 
 def test_sign_shards_exact(spark):
@@ -117,10 +51,10 @@ def test_sign_shards_exact(spark):
     state = shards.update(seen, shards.init_state(spark, N_BUCKETS)).cache()
     state.count()
     # no false negatives
-    assert shards.probe(seen, state).filter(~F.col("maybe_seen")).count() == 0
+    assert _probe(seen, state).filter(~F.col("maybe_seen")).count() == 0
     # no false positives
     fresh = _with_keys(_urls(spark, 50_000, 52_000, tag="w"))
-    assert shards.probe(fresh, state).filter(F.col("maybe_seen")).count() == 0
+    assert _probe(fresh, state).filter(F.col("maybe_seen")).count() == 0
 
 
 def test_sign_shards_delete(spark):
@@ -134,17 +68,24 @@ def test_sign_shards_delete(spark):
         state, deletes=dels.select("bucket", "sign"),
     ).cache()
     state2.count()
-    assert shards.probe(dels, state2).filter(F.col("maybe_seen")).count() == 0
+    assert _probe(dels, state2).filter(F.col("maybe_seen")).count() == 0
     kept = rows.join(dels.select("url"), "url", "left_anti")
-    assert shards.probe(kept, state2).filter(~F.col("maybe_seen")).count() == 0
+    assert _probe(kept, state2).filter(~F.col("maybe_seen")).count() == 0
 
 
-def test_bloom_kernel_numpy_roundtrip():
-    """Pure-numpy kernel check without Spark (fast path for CI)."""
-    shards = BloomShards(BloomSpec(capacity=1000, fpp=0.01))
-    bits = shards._empty()
-    signs = np.arange(1, 500, dtype=np.int64) * 2654435761
-    shards._set_bits(bits, signs)
-    assert shards._probe_bits(bits, signs).all()
-    other = np.arange(500_000, 501_000, dtype=np.int64) * 40503
-    assert shards._probe_bits(bits, other).mean() < 0.05
+def test_sign_blob_helpers():
+    """The state blob round-trips through decode_signs (NULL and missing
+    state decode to empty), and contains is exact over it."""
+    signs = np.unique(np.arange(1, 500, dtype=np.uint64)
+                      * np.uint64(2654435761))
+    blob = pd.DataFrame({"bucket": [0], "state": [signs.tobytes()]})
+    got = decode_signs(blob)
+    assert np.array_equal(got, signs)
+    assert contains(got, signs).all()
+    other = np.arange(1, 500, dtype=np.uint64) * np.uint64(2654435761) + 1
+    assert not contains(got, other).any()
+    for empty in (pd.DataFrame({"bucket": [0], "state": [None]}),
+                  pd.DataFrame({"bucket": [], "state": []})):
+        e = decode_signs(empty)
+        assert len(e) == 0 and e.dtype == np.uint64
+        assert not contains(e, signs).any()

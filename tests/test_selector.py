@@ -553,3 +553,27 @@ def test_valuable_image_link_reference_vectors(spark):
     ).collect()}
     for u, want in cases:
         assert got[u] == want, u
+
+
+def test_paginate_list_urls(spark):
+    df = spark.createDataFrame(
+        [("http://shop.com/list?cat=5&page=2",),
+         ("http://shop.com/item/9",)],
+        "url string",
+    )
+    out = sel.paginate_list_urls(df, n_next=3)
+    got = sorted(r["next_url"] for r in out.collect())
+    assert got == [
+        "http://shop.com/list?cat=5&page=3",
+        "http://shop.com/list?cat=5&page=4",
+        "http://shop.com/list?cat=5&page=5",
+    ]
+
+
+def test_bad_page_filter(spark):
+    docs = spark.createDataFrame(
+        [(1, 111), (2, 222), (3, 333)], "doc_id long, simhash long"
+    )
+    bad = spark.createDataFrame([(222,)], "bad_sign long")
+    kept = {r["doc_id"] for r in sel.bad_page_filter(docs, bad).collect()}
+    assert kept == {1, 3}

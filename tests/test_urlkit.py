@@ -205,23 +205,6 @@ def test_resolve_link(spark):
     ]
 
 
-def test_salted_bucket_spreads_big_hosts(spark):
-    df = spark.range(2000).select(
-        F.lit("big.example.com").alias("host"),
-        F.concat(F.lit("http://big.example.com/p/"), F.col("id")).alias("url"),
-    )
-    plain = df.select(
-        urlkit.host_bucket(F.col("host"), 16).alias("b")
-    ).distinct().count()
-    salted = df.select(
-        urlkit.salted_bucket(
-            F.col("host"), F.col("url"), 16, 8, F.lit(True)
-        ).alias("b")
-    ).distinct().count()
-    assert plain == 1
-    assert salted == 8  # spread over n_salt sub-buckets
-
-
 def test_parse_host_py_rejects_whitespace_host(spark):
     """The python twin enforces the same host-validity contract as the
     Column variants' _VALID_HOST_RE (review r4: 'a b.com' used to parse
