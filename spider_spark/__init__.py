@@ -35,6 +35,9 @@ dedup        exact / minhash-LSH / n-gram-Jaccard / embedding dedup family
 similarity   cosine kernels, brute-force + IVF-lite + multi-probe-LSH ANN,
              hyperplane bucket keys
 textstats    language ID, quality scoring, token counting, fingerprints
+multimodal   binary media columns + real PNG/BMP/PPM/WAV/Y4M decode kernels
+             (decode_images / decode_audio / sample_frames); jpeg/mp3/mp4
+             behind the codec extension point
 simulator    pure-Python reference simulator (correctness oracle for
              crawl ordering + URL-seen set under a seeded politeness budget)
 """
