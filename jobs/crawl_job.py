@@ -48,6 +48,10 @@ def main() -> None:
                         "every N rounds; 0 = never")
     p.add_argument("--resume", action="store_true")
     args = p.parse_args()
+    for flag, v in (("--recrawl-ttl", args.recrawl_ttl),
+                    ("--compact-every", args.compact_every)):
+        if v < 0:
+            p.error(f"{flag} must be >= 0 (0 = never), got {v}")
 
     spark = SparkSession.builder.appName("spider-crawl").getOrCreate()
     spark.conf.set("spark.sql.adaptive.enabled", "true")

@@ -154,6 +154,11 @@ def main() -> None:
                 .withColumn(side, F.coalesce("_keep", side))
                 .drop("_pid", "_keep")
             )
+        # ... and drop ids absent from the corpus, which could otherwise
+        # win a cluster's keep_id and drop every real doc in it
+        ids = survivors.select(F.col(args.id_col).alias("_sid"))
+        for side in ("a", "b"):
+            pairs = pairs.join(ids, pairs[side] == ids["_sid"], "left_semi")
         pairs = (
             pairs.filter(F.col("a") != F.col("b"))
             .select(F.least("a", "b").alias("a"),

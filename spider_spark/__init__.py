@@ -13,8 +13,9 @@ session      SparkSession factory with scale-tuned confs (AQE, Arrow, shuffle)
 urlkit       URL canonicalization, 64-bit fingerprints, host parsing/sharding
 spans        interleaved-document schema, synthetic web generator, outlink
              extraction (the engine's primary input per BASELINE.json)
-seen         URL-seen set: exact 64-bit sign shards (sorted uint64 blob per
-             bucket; the one place that encodes/decodes/probes it)
+seen         URL-seen set: exact 64-bit sign shards (sorted uint64 signs +
+             uint16 last-crawl rounds per bucket blob; the one place that
+             encodes/decodes/probes/expires it)
 fused        the round's seen-probe + per-host admission as one cogrouped
              Arrow stage
 frontier     UV scoring, priority banding, per-host top-k budgets

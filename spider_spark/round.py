@@ -32,6 +32,8 @@ from __future__ import annotations
 
 import json
 import os
+import re
+import warnings
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -46,6 +48,8 @@ from .spans import extract_outlink_arrays
 
 # logical clock anchor: round r fetches stamp 2020-01-01 + r days
 _EPOCH_2020 = 1_577_836_800
+
+_ROWS_PER_BUCKET_WARN = 10**7  # see RoundSpec.n_buckets
 
 # one linkbase row per fetch attempt (mr_selector_r1_mapper.cc:198-201
 # record, reduced to the fields the downstream loops consume)
@@ -71,20 +75,14 @@ class RoundSpec:
     """Knobs of one crawl run. Defaults mirror the reference's deployed
     config (BASELINE.md §A)."""
 
-    n_buckets: int = 256         # seen-shard / fused-kernel bucket count.
-    # A bucket is ONE Arrow group whose input is bounded by
-    # Σ over its hosts of min(host_rows, frontier_host_cap) — so per-group
-    # rows ≈ frontier_size / n_buckets on a spread frontier and ≤
-    # hosts_per_bucket × cap under skew. Size it ≫ executor slots AND so
-    # frontier/n_buckets fits one Arrow batch comfortably (≤ ~10^7 rows);
-    # at a 10^10-row frontier that means n_buckets ≥ ~2048, not this
-    # library default.
+    n_buckets: int = 256         # seen-shard / fused-kernel bucket count:
+    # one Arrow group each, so ≫ executor slots and ≤ ~10^7 rows (warned)
     max_depth: int = 4           # extractor depth gate, url.proto:9-11
     max_rounds: int = 50
     politeness: pol.PolitenessSpec = field(default_factory=pol.PolitenessSpec)
     recrawl_ttl_rounds: int | None = None  # scheduler.cc:381-393: a url
-    # whose latest crawl is ≥ ttl rounds old stops counting as seen (its
-    # sign is deleted from the shard), so rediscovery re-admits it.
+    # whose latest crawl is ≥ ttl rounds old stops counting as seen (the
+    # seen shard masks out its round stamp), so rediscovery re-admits it.
     compact_every: int | None = None  # fold committed linkbase deltas
     # (latest-round-wins, compact_linkbase) every N committed rounds —
     # bounds the delta-partition count a long crawl accumulates
@@ -103,6 +101,23 @@ class RoundSpec:
     # mega-host can put at most `cap` rows into its host bucket. Overflow
     # rows are dropped (re-extraction rediscovers them); order kept is
     # (vip desc, depth asc, url asc) — VIPs always survive the cut.
+
+    def __post_init__(self):
+        for name in ("n_buckets", "recrawl_ttl_rounds", "compact_every"):
+            v = getattr(self, name)
+            if v is not None and v < 1:
+                raise ValueError(f"RoundSpec.{name} must be >= 1, got {v}")
+
+
+def _rounds_under(path: str, marker: str | None = None) -> list[int]:
+    """Sorted N of the ``round=N`` dirs in ``path`` (that hold ``marker``)."""
+    if not os.path.isdir(path):
+        return []
+    return sorted(
+        int(d.split("=")[1]) for d in os.listdir(path)
+        if d.startswith("round=")
+        and (marker is None or os.path.exists(os.path.join(path, d, marker)))
+    )
 
 
 def score_expr(depth, uv=None):
@@ -139,6 +154,12 @@ class CrawlRun:
                  host_ips: DataFrame | None = None,
                  ip_budgets: DataFrame | None = None,
                  extract_rules: list[tuple[str, str, str]] | None = None):
+        # state I/O is os.path/os.listdir: a URI would be written, then lost
+        if re.match(r"[A-Za-z][A-Za-z0-9+.-]+:", ckpt_dir):
+            raise ValueError(
+                f"ckpt_dir {ckpt_dir!r} is a URI; CrawlRun checkpoints need "
+                "a plain filesystem path"
+            )
         self.spark = spark
         self.spec = spec
         self.ckpt = ckpt_dir
@@ -519,8 +540,7 @@ class CrawlRun:
                 # nothing staged for r — every row was superseded; the
                 # old dir is retired wholesale
                 os.rename(lb_dir, os.path.join(trash, f"round={r}"))
-        present = [d for d in os.listdir(lb_root) if d.startswith("round=")]
-        if not present:
+        if not _rounds_under(lb_root):
             # keep the partitioned layout readable (schema-bearing empty
             # delta, same as bootstrap's seed)
             self._write_linkbase_delta(
@@ -574,10 +594,6 @@ class CrawlRun:
 
         - ``_linkbase(upto)`` for ``upto >= C``: same url set (dupes only
           removed — every consumer is url-distinct or latest-wins).
-        - recrawl-TTL (``round == exp_round`` / ``round > exp_round``
-          pruning in :meth:`run_round`): a url now sits exactly in its
-          latest-fetch partition, which is precisely the set the original
-          expiring-minus-later anti-join computed.
         - time travel below ``C`` is gone by design; the floor is recorded
           in ``linkbase/_compaction.json`` and ``_linkbase`` fails fast.
 
@@ -621,11 +637,7 @@ class CrawlRun:
                 f"already compacted through {self._compaction_floor()}"
             )
         lb_root = os.path.join(self.ckpt, "linkbase")
-        present = [
-            int(d.split("=")[1]) for d in os.listdir(lb_root)
-            if d.startswith("round=")
-        ]
-        targets = sorted(r for r in present if r <= c)
+        targets = [r for r in _rounds_under(lb_root) if r <= c]
         if not targets:
             return {"compacted_through": c, "rows_before": 0,
                     "rows_after": 0, "dead_links": 0, "cmd_deleted": 0}
@@ -718,10 +730,7 @@ class CrawlRun:
         # POINT of the swap: from here a crash at any step is completed
         # idempotently by _recover_swap/_apply_swap. Before the marker,
         # the old dirs are untouched and the stage is discardable.
-        staged_rounds = sorted(
-            int(d.split("=")[1]) for d in os.listdir(stage)
-            if d.startswith("round=")
-        )
+        staged_rounds = _rounds_under(stage)
         pending = {"targets": targets, "staged_rounds": staged_rounds,
                    "compacted_through": c,
                    "rows_before": rows_before, "rows_after": rows_after}
@@ -881,14 +890,8 @@ class CrawlRun:
         )
 
     def last_committed_round(self) -> int | None:
-        if not os.path.isdir(self.ckpt):
-            return None
-        rounds = []
-        for d in os.listdir(self.ckpt):
-            mf = os.path.join(self.ckpt, d, "manifest.json")
-            if d.startswith("round=") and os.path.exists(mf):
-                rounds.append(int(d.split("=")[1]))
-        return max(rounds) if rounds else None
+        rounds = _rounds_under(self.ckpt, "manifest.json")
+        return rounds[-1] if rounds else None
 
     # -- snapshot lineage / time travel (Iceberg snapshot-log role) ----------
 
@@ -904,15 +907,8 @@ class CrawlRun:
         and ``linkbase_compacted_through`` for delta compaction, after
         which files diverges from the historical ``metrics`` by
         design)."""
-        if not os.path.isdir(self.ckpt):
-            return []
-        rounds = sorted(
-            int(d.split("=")[1]) for d in os.listdir(self.ckpt)
-            if d.startswith("round=")
-            and os.path.exists(os.path.join(self.ckpt, d, "manifest.json"))
-        )
         out = []
-        for r in rounds:
+        for r in _rounds_under(self.ckpt, "manifest.json"):
             with open(os.path.join(self._round_dir(r), "manifest.json")) as f:
                 out.append(json.load(f))
         return out
@@ -1002,6 +998,12 @@ class CrawlRun:
         self._write(
             cand.observe(obs, F.count(F.lit(1)).alias("n")), 0, "frontier"
         )
+        n_frontier = int(obs.get["n"])
+        if n_frontier / self.spec.n_buckets > _ROWS_PER_BUCKET_WARN:
+            warnings.warn(f"seed frontier of {n_frontier} rows over n_buckets="
+                          f"{self.spec.n_buckets} exceeds "
+                          f"{_ROWS_PER_BUCKET_WARN:g} rows per fused Arrow "
+                          "group; raise RoundSpec.n_buckets", stacklevel=2)
         if cand_cache is not None:
             cand_cache.unpersist()
         self._write(
@@ -1019,21 +1021,16 @@ class CrawlRun:
         # at deleted files and double-count delta 0 across snapshots
         self._manifest(
             0,
-            {"seeded": True, "frontier": int(obs.get["n"]),
+            {"seeded": True, "frontier": n_frontier,
              "spec": self._spec_fingerprint(),
              "files": self._snapshot_files(0, lb_delta_round=None)},
         )
 
     def _spec_fingerprint(self) -> dict:
-        """The knobs that shape the persisted state layout. Resuming with a
-        different value would probe seen_state under mismatched bucket keys
-        (every probe misses → seen URLs re-admitted) — so the round-0
-        manifest records them and resume validates. The round has one
-        layout (host-keyed exact sign shards); its two constant entries
-        keep checkpoints written under the former layout switches
-        comparable, so only the default layout resumes."""
-        return {"seen_mode": "sign", "fused": True,
-                "n_buckets": self.spec.n_buckets}
+        """The persisted state layout (seen blob format, bucket count): the
+        round-0 manifest records it and resume validates it, since another
+        layout would mis-decode the blobs or miss every probe."""
+        return {"seen_state": "sign+round", "n_buckets": self.spec.n_buckets}
 
     def _validate_resume_spec(self) -> None:
         path = os.path.join(self._round_dir(0), "manifest.json")
@@ -1200,32 +1197,12 @@ class CrawlRun:
             nxt_cache = self._persist_round(nxt)
             nxt = self._cap_frontier(nxt_cache, self.spec.frontier_host_cap)
 
-        # 6. state updates. Recrawl TTL (scheduler.cc:381-393): the seen
-        #    state written for round r+1 drops signs whose LATEST crawl
-        #    round is exactly (r+1) - ttl — computed from the partition-
-        #    pruned linkbase deltas in (exp_round, r-1] plus this round's
-        #    fetches, so the anti-join spans at most ttl deltas.
-        deletes = None
-        ttl = self.spec.recrawl_ttl_rounds
-        if ttl is not None and r + 1 - ttl >= 0:
-            exp_round = r + 1 - ttl
-            self._recover_swap()  # direct dir read — complete any mid-swap
-            lb_all = self.spark.read.schema(
-                LINKBASE_SCHEMA + ", round int"
-            ).parquet(os.path.join(self.ckpt, "linkbase"))
-            expiring = lb_all.filter(F.col("round") == exp_round).select(
-                "url", "host"
-            )
-            later = (
-                lb_all.filter(
-                    (F.col("round") > exp_round) & (F.col("round") < r)
-                ).select("url")
-                .unionByName(fetched.select("url"))
-            )
-            expired = expiring.join(later.distinct(), "url", "left_anti")
-            deletes = self._seen_keys(expired)
+        # 6. state updates. Recrawl TTL (scheduler.cc:381-393): admitted
+        #    signs are stamped r, and stamps that fall out of the ttl
+        #    window are masked out of the state written for round r+1.
         new_seen = self.shards.update(
-            admitted.select("bucket", "sign"), seen_state, deletes=deletes,
+            admitted.select("bucket", "sign"), seen_state,
+            round_no=r, ttl=self.spec.recrawl_ttl_rounds,
         )
         new_host_state = pol.update_host_state(
             host_state, fetched.select("host", "success"),
@@ -1339,6 +1316,7 @@ class CrawlRun:
                 self.bootstrap(seeds)
             else:
                 self._recover_enqueue()
+                self._recover_swap()
                 self._validate_resume_spec()
                 start = last
         else:

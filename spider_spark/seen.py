@@ -1,23 +1,18 @@
-"""URL-seen set: exact sign shards.
+"""URL-seen set: exact sign shards stamped with their last crawl round.
 
 The reference keeps its online "have we crawled this" state in a Redis
-hash keyed by the 64-bit url sign ``base::CalcUrlSign(url)``
-(crawler/crawler2/general_crawler/url.proto:18-27, scheduler.cc:289-314).
-The Spark rendering is :class:`SignShards`: per bucket a SORTED numpy
-uint64 array of url signs, stored as a ``(bucket int, state binary)``
-DataFrame (checkpointable as parquet/Iceberg binary columns). The sign IS
-the identity, so hash-collision semantics match the reference exactly and
-no false-positive confirm join is needed.
+hash keyed by the 64-bit url sign ``base::CalcUrlSign(url)``, each record
+carrying its ``latest_crawl_timestamp`` (url.proto:18-27,
+scheduler.cc:289-314). :class:`SignShards` keeps one blob per bucket in a
+``(bucket int, state binary)`` DataFrame; the sign IS the identity, so
+collision semantics match the reference and no confirm join is needed.
 
-The blob format lives here and only here: :func:`decode_signs` turns one
-bucket's state rows into the sorted sign array and :func:`contains` tests
-membership. The fused probe+admit kernel (fused.py) and
-:meth:`SignShards.update` both go through them.
-
-Cost: 8 B/url — 80 GB for 10^10 URLs, ~1.2 MB/bucket over 65k buckets,
-each co-resident with its bucket's candidates. Probe = vectorized binary
-search against the sorted array; update = sorted merge; deletion (recrawl
-TTL) = set difference.
+Blob layout, known only to this module (:func:`encode_state` /
+:func:`decode_state`): the bucket's n SORTED uint64 signs, then a
+parallel uint16 array of the round each was last admitted in — 10 B/url,
+100 GB for 10^10 URLs. Probe = binary search over the sign view
+(:func:`decode_signs`, :func:`contains`; fused.py); update = sorted merge;
+recrawl TTL (scheduler.cc:381-393) = a mask over the stamps.
 """
 
 from __future__ import annotations
@@ -36,14 +31,29 @@ STATE_SCHEMA = T.StructType(
 )
 
 
-def decode_signs(state_pdf: pd.DataFrame) -> np.ndarray:
+_STAMP = np.uint16  # round of last admission; bounds the round counter
+
+
+def encode_state(signs: np.ndarray, stamps: np.ndarray) -> bytes:
+    """Sorted uint64 signs + their parallel round stamps → one blob."""
+    return signs.astype(np.uint64).tobytes() + stamps.astype(_STAMP).tobytes()
+
+
+def decode_state(state_pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
     """One bucket's state rows (zero or one ``(bucket, state)`` row, the
-    state possibly NULL for a never-written bucket) → its sorted uint64
-    sign array (empty when there is no state)."""
+    state possibly NULL for a never-written bucket) → (sorted uint64
+    signs, uint16 stamps), both empty when there is no state."""
     if len(state_pdf) and state_pdf["state"].iloc[0] is not None:
-        return np.frombuffer(bytes(state_pdf["state"].iloc[0]),
-                             dtype=np.uint64)
-    return np.zeros(0, dtype=np.uint64)
+        blob = bytes(state_pdf["state"].iloc[0])
+        n = len(blob) // 10
+        return (np.frombuffer(blob, np.uint64, count=n),
+                np.frombuffer(blob, _STAMP, count=n, offset=8 * n))
+    return np.zeros(0, dtype=np.uint64), np.zeros(0, dtype=_STAMP)
+
+
+def decode_signs(state_pdf: pd.DataFrame) -> np.ndarray:
+    """The sorted uint64 sign view of one bucket's state rows."""
+    return decode_state(state_pdf)[0]
 
 
 def contains(seen: np.ndarray, signs: np.ndarray) -> np.ndarray:
@@ -79,33 +89,32 @@ class SignShards:
     inside the fused probe+admit stage (fused.py)."""
 
     def update(self, admitted: DataFrame, state: DataFrame,
-               deletes: DataFrame | None = None) -> DataFrame:
-        """Fold ``admitted`` (bucket, sign) rows into the shards and drop
-        ``deletes`` (bucket, sign) rows; returns the new full state
-        DataFrame (all buckets, including untouched ones)."""
-        spark = admitted.sparkSession
-        dels = (
-            deletes
-            if deletes is not None
-            else spark.createDataFrame([], "bucket int, sign long")
-        ).select("bucket", "sign", F.lit(True).alias("is_delete"))
-        adds = admitted.select("bucket", "sign",
-                               F.lit(False).alias("is_delete"))
-        combined = adds.unionByName(dels)
+               round_no: int = 0, ttl: int | None = None) -> DataFrame:
+        """Fold ``admitted`` (bucket, sign) rows into the shards stamped
+        ``round_no`` (a re-admitted sign takes the new stamp); with
+        ``ttl``, drop stamps ``<= round_no + 1 - ttl`` (expired for round
+        ``round_no + 1``). Returns the new state of every bucket."""
+        if not 0 <= round_no <= np.iinfo(_STAMP).max:
+            raise ValueError(f"round_no {round_no} does not fit the "
+                             "uint16 seen-state stamp")
 
         def fn(key, pdf: pd.DataFrame, state_pdf: pd.DataFrame):
-            seen = decode_signs(state_pdf)
-            add = pdf.loc[~pdf["is_delete"], "sign"].to_numpy().astype(np.uint64)
-            merged = np.union1d(seen, add)
-            d = pdf.loc[pdf["is_delete"], "sign"].to_numpy().astype(np.uint64)
-            if len(d):
-                merged = np.setdiff1d(merged, d, assume_unique=False)
-            return pd.DataFrame(
-                {"bucket": [int(key[0])], "state": [merged.tobytes()]}
-            )
+            signs, stamps = decode_state(state_pdf)
+            add = pdf["sign"].to_numpy().astype(np.uint64)
+            # adds first: np.unique keeps the first occurrence of a sign
+            signs, first = np.unique(np.concatenate([add, signs]),
+                                     return_index=True)
+            stamps = np.concatenate(
+                [np.full(len(add), round_no, dtype=_STAMP), stamps])[first]
+            if ttl is not None:
+                live = stamps > round_no + 1 - ttl
+                signs, stamps = signs[live], stamps[live]
+            return pd.DataFrame({"bucket": [int(key[0])],
+                                 "state": [encode_state(signs, stamps)]})
 
         return (
-            _bucket_spread(combined).groupBy("bucket")
+            _bucket_spread(admitted.select("bucket", "sign"))
+            .groupBy("bucket")
             .cogroup(_bucket_spread(state).groupBy("bucket"))
             .applyInPandas(fn, schema=STATE_SCHEMA)
         )

@@ -76,3 +76,43 @@ def test_dedup_job_from_spans_joins_text_in_offset_order(
     kept = spark.read.parquet(out + "/kept").collect()
     assert [(r["doc_id"], r["text"]) for r in kept] == [
         ("d1", "alpha beta gamma delta")]
+
+
+def test_dedup_job_embedding_keeper_exists_in_corpus(
+        spark, tmp_path, monkeypatch, capsys):
+    """An embedding id absent from the docs never becomes a cluster's
+    keep_id: as the min id of its cluster it would otherwise be elected
+    survivor and the real doc it pairs with would be dropped."""
+    docs = str(tmp_path / "docs")
+    spark.createDataFrame(
+        [("d1", "alpha"), ("d2", "beta"), ("d3", "gamma"), ("d4", "delta")],
+        "doc_id string, text string",
+    ).write.parquet(docs)
+    emb = str(tmp_path / "emb")
+    spark.createDataFrame(
+        [("a0", [1.0, 0.0, 0.0, 0.0]),   # not in the corpus
+         ("d1", [1.0, 0.0, 0.0, 0.0]),
+         ("d2", [0.0, 1.0, 0.0, 0.0]),
+         ("d4", [0.0, 1.0, 0.0, 0.0]),   # near copy of d2
+         ("d3", [0.0, 0.0, 1.0, 0.0])],
+        "doc_id string, embedding array<double>",
+    ).write.parquet(emb)
+    out = str(tmp_path / "out")
+    _run(monkeypatch, "dedup_job", "--docs", docs, "--out", out,
+         "--method", "embedding", "--embeddings", emb)
+    clusters = spark.read.parquet(out + "/near_clusters").collect()
+    assert {r["keep_id"] for r in clusters} == {"d2"}
+    kept = sorted(r["doc_id"] for r in
+                  spark.read.parquet(out + "/kept").collect())
+    assert kept == ["d1", "d2", "d3"]
+
+
+@pytest.mark.parametrize("flag", ["--recrawl-ttl", "--compact-every"])
+def test_crawl_job_negative_period_is_a_usage_error(
+        tmp_path, monkeypatch, capsys, flag):
+    """Negative --recrawl-ttl / --compact-every are usage errors naming the
+    flag (0 still means never), raised before any Spark work."""
+    with pytest.raises(SystemExit):
+        _run(monkeypatch, "crawl_job", "--docs", str(tmp_path / "docs"),
+             "--ckpt", str(tmp_path / "ck"), flag, "-1")
+    assert flag in capsys.readouterr().err

@@ -5,6 +5,7 @@ final URL-seen set under the same seed list + politeness budget."""
 from __future__ import annotations
 
 import collections
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -155,33 +156,33 @@ def one_round_ckpt(spark, world, tmp_path_factory):
     return ck
 
 
-def _set_spec(**kv):
-    def mutate(m):
-        m["spec"].update(kv)
-    return mutate
-
-
 def _drop_spec(m):
     del m["spec"]
 
 
-def _parent_default_spec(m):
-    m["spec"] = {"seen_mode": "sign", "fused": True, "n_buckets": 8}
+def _former_spec(**kv):
+    """A round-0 manifest spec as written before seen shards carried round
+    stamps (8-byte-per-url blobs)."""
+    def mutate(m):
+        m["spec"] = {"seen_mode": "sign", "fused": True, "n_buckets": 8,
+                     **kv}
+    return mutate
 
 
 @pytest.mark.parametrize("mutate,n_buckets,resumes", [
     (None, 16, False),                           # bucket count changed
-    (_set_spec(seen_mode="bloom"), 8, False),    # former Bloom layout
-    (_set_spec(fused=False), 8, False),          # former sign-keyed buckets
+    (_former_spec(seen_mode="bloom"), 8, False),  # former Bloom layout
+    (_former_spec(fused=False), 8, False),       # former sign-keyed buckets
     (_drop_spec, 8, False),                      # no recorded layout
-    (_parent_default_spec, 8, True),             # default layout: resumes
-], ids=["n_buckets", "bloom", "unfused", "no_spec", "default"])
+    (_former_spec(), 8, False),                  # unstamped sign blobs
+    (None, 8, True),                             # current layout: resumes
+], ids=["n_buckets", "bloom", "unfused", "no_spec", "unstamped", "default"])
 def test_resume_state_layout_guard(spark, world, one_round_ckpt, tmp_path,
                                    mutate, n_buckets, resumes):
     """Resume validates the state layout the round-0 manifest records: a
-    mismatch would probe seen_state under the wrong bucket keys and
-    silently miss every seen url, so it must fail fast. A checkpoint
-    written under the default layout (the only one left) resumes."""
+    mismatch would mis-decode the seen blobs or probe them under the wrong
+    bucket keys and silently miss every seen url, so it must fail fast. A
+    checkpoint written under the current layout resumes."""
     import json
     import os
     import shutil
@@ -373,10 +374,12 @@ def test_per_ip_cap_matches_simulator(spark, tmp_path_factory):
     assert run.seen_urls() == simout["seen"]
 
 
-def test_recrawl_ttl_matches_simulator(spark, tmp_path_factory):
+@pytest.mark.parametrize("ttl", [1, 2, 3])
+def test_recrawl_ttl_matches_simulator(spark, tmp_path_factory, ttl):
     """Batch recrawl TTL (scheduler.cc:381-393): signs older than ttl
     rounds leave the seen shard, so a rediscovered url re-admits. Ring web
-    + budget 1 → a rolling refresh cycle, twinned by the simulator."""
+    + budget 1 → a rolling refresh cycle, twinned by the simulator. At
+    ttl=1 a url expires in the round that crawls it."""
     s = "http://r.example.com/p/0"
     p1, p2, p3 = (f"http://r.example.com/p/{i}" for i in (1, 2, 3))
     adj = {s: [p1], p1: [p2], p2: [p3], p3: [p1]}
@@ -385,7 +388,7 @@ def test_recrawl_ttl_matches_simulator(spark, tmp_path_factory):
     rspec = RoundSpec(
         n_buckets=4, max_depth=8, max_rounds=7,
         politeness=PolitenessSpec(qps=1.0, round_seconds=1.0),  # budget 1
-        recrawl_ttl_rounds=3,
+        recrawl_ttl_rounds=ttl,
     )
     ck = str(tmp_path_factory.mktemp("ck_ttl"))
     _, rounds = _run_engine(spark, docs, robots, ck, rspec, [s])
@@ -393,7 +396,7 @@ def test_recrawl_ttl_matches_simulator(spark, tmp_path_factory):
     simout = sim.simulate(
         [s], adj, _sim_robots_allow(["r.example.com"]),
         sim.SimSpec(default_budget=1, max_depth=8, max_rounds=7,
-                    recrawl_ttl_rounds=3),
+                    recrawl_ttl_rounds=ttl),
     )
     assert rounds == simout["rounds"]
     # the TTL must actually bind: p1 crawled at r1 AND again after expiry
@@ -441,10 +444,90 @@ def test_ttl_resume_and_manifest_lineage(spark, tmp_path_factory):
     with open(os.path.join(ck, f"round={last:04d}", "manifest.json")) as f:
         m = json.load(f)
     assert m["parent_round"] == last - 1
-    assert m["spec"]["seen_mode"] == "sign" and m["spec"]["fused"] is True
+    assert m["spec"] == {"seen_state": "sign+round", "n_buckets": 4}
     for k in ("admitted", "frontier_next", "hosts_tracked",
               "linkbase_delta_rows", "fetch_ok"):
         assert k in m["metrics"], m
+
+
+def test_ttl_expires_url_purged_from_linkbase(spark, tmp_path_factory):
+    """Seen shards are independent of the page base: a dead link purged by
+    compact_linkbase(max_fail=1) before its TTL runs out still expires on
+    schedule, so its rediscovery re-admits it after a resume, as in the
+    simulator."""
+    s = "http://rp.example.com/p/0"
+    miss = "http://rp.example.com/missing"
+    p1, p2, p3 = (f"http://rp.example.com/p/{i}" for i in (1, 2, 3))
+    adj = {s: [p1, miss], p1: [p2], p2: [p3], p3: [p1, miss]}
+    docs = _mk_docs(spark, {u: v for u, v in adj.items() if u != miss})
+    robots = _allow_all_robots(spark, ["rp.example.com"])
+
+    def spec(max_rounds):
+        return RoundSpec(
+            n_buckets=4, max_depth=8, max_rounds=max_rounds,
+            politeness=PolitenessSpec(qps=1.0, round_seconds=2.0),
+            recrawl_ttl_rounds=3,
+        )
+
+    ck = str(tmp_path_factory.mktemp("ck_ttl_purge"))
+    run1, first = _run_engine(spark, docs, robots, ck, spec(3), [s])
+    assert miss in first[1]
+    assert run1.compact_linkbase(max_fail=1)["dead_links"] == 1
+    run2 = WitnessRun(spark, docs, robots, ck, spec(7))
+    res = run2.run(spark.createDataFrame([(s,)], "url string"), resume=True)
+    assert res[0]["round"] == 3
+    simout = sim.simulate(
+        [s], adj, _sim_robots_allow(["rp.example.com"]),
+        sim.SimSpec(default_budget=2, max_depth=8, max_rounds=7,
+                    recrawl_ttl_rounds=3),
+    )
+    assert first + batches(res) == simout["rounds"]
+    assert miss in simout["rounds"][4]
+
+
+@pytest.mark.parametrize("field", ["recrawl_ttl_rounds", "compact_every"])
+@pytest.mark.parametrize("value", [0, -2])
+def test_round_spec_rejects_non_positive_periods(field, value):
+    """A recrawl TTL or compaction period below one round is an input
+    error; None (off) and positive values construct."""
+    with pytest.raises(ValueError, match=field):
+        RoundSpec(**{field: value})
+    assert getattr(RoundSpec(**{field: 1}), field) == 1
+    assert getattr(RoundSpec(**{field: None}), field) is None
+    with pytest.raises(ValueError, match="n_buckets"):
+        RoundSpec(n_buckets=value)
+
+
+@pytest.mark.parametrize("uri", ["file:///tmp/ck", "s3a://bucket/ck",
+                                 "hdfs://nn:8020/ck", "file:/tmp/ck"])
+def test_ckpt_dir_uri_rejected(spark, world, uri):
+    """Checkpoint state is listed and renamed through os.path, so a URI
+    checkpoint dir is refused up front, naming the path, instead of
+    failing after Spark has written state under it."""
+    docs, robots, _, _ = world
+    with pytest.raises(ValueError, match=re.escape(repr(uri))):
+        CrawlRun(spark, docs, robots, uri, RSPEC)
+
+
+def test_bootstrap_warns_on_rows_per_bucket(spark, world, tmp_path,
+                                            monkeypatch):
+    """bootstrap warns, with the numbers, when the seed frontier per
+    bucket exceeds the module threshold (10^7 rows in production)."""
+    import warnings
+
+    import spider_spark.round as round_mod
+
+    docs, robots, _, _ = world
+    seeds_df = spark.createDataFrame([(u,) for u in SEEDS], "url string")
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        CrawlRun(spark, docs, robots, str(tmp_path / "a"), RSPEC).bootstrap(
+            seeds_df)
+    assert not [w for w in caught if "n_buckets" in str(w.message)]
+    monkeypatch.setattr(round_mod, "_ROWS_PER_BUCKET_WARN", 0.1)
+    with pytest.warns(UserWarning, match=r"3 rows over n_buckets=8"):
+        CrawlRun(spark, docs, robots, str(tmp_path / "b"), RSPEC).bootstrap(
+            seeds_df)
 
 
 def test_kitchen_sink_composition_matches_simulator(spark, tmp_path_factory):
