@@ -472,37 +472,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def dedup_clusters(spark, sf):
         """Near-dup cluster resolution: minhash pairs → connected
-        components by min-label propagation (dedup.resolve_pair_clusters)
-        → every doc's canonical survivor id (singletons keep themselves).
-        The DuckDB twin closes the same pairs with a recursive CTE."""
+        components by min-label propagation with pointer jumping
+        (dedup.resolve_pair_clusters) → every doc's canonical survivor
+        id (singletons keep themselves). The DuckDB twin closes the same
+        pairs with a recursive CTE."""
         _ensure_shipped(spark)
         d = _t(spark, sf, "documents")
         pairs = dedup.minhash_near_duplicates(
             d, "doc_id", "text", k=128, bands=32, shingle=3, threshold=0.8
         )
         clusters = dedup.resolve_pair_clusters(pairs, "a", "b")
-        return (
-            d.select(F.col("doc_id").alias("id"))
-            .join(clusters, "id", "left")
-            .select(
-                F.col("id").alias("doc_id"),
-                F.coalesce("keep_id", "id").alias("keep_id"),
-            )
-        )
-
-    def dedup_clusters_star(spark, sf):
-        """Same cluster resolution through the large-star/small-star
-        connected-components variant (Kiveris et al. — O(log n) rounds
-        regardless of component diameter; the 10^10-edge scale path).
-        Shares dedup_clusters' recursive-CTE oracle: both algorithms must
-        produce the identical (doc_id, keep_id) table."""
-        _ensure_shipped(spark)
-        d = _t(spark, sf, "documents")
-        pairs = dedup.minhash_near_duplicates(
-            d, "doc_id", "text", k=128, bands=32, shingle=3, threshold=0.8
-        )
-        clusters = dedup.resolve_pair_clusters(
-            pairs, "a", "b", algorithm="star")
         return (
             d.select(F.col("doc_id").alias("id"))
             .join(clusters, "id", "left")
@@ -1037,7 +1016,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_stats": dedup_stats,
         "minhash_near_dups": minhash_near_dups,
         "dedup_clusters": dedup_clusters,
-        "dedup_clusters_star": dedup_clusters_star,
+        # kept for drivers that query it by this name; one resolver
+        "dedup_clusters_star": dedup_clusters,
         "hub_dig": hub_dig,
         "token_stats": token_stats,
         "lang_detect": lang_detect,
@@ -1734,8 +1714,7 @@ def oracle_sql() -> dict[str, str]:
         # check + pytest differentials (tests/test_simhash.py,
         # test_similarity.py, test_selector.py).
     }
-    # the star-CC variant must produce the identical cluster table — the
-    # two Spark algorithms share one DuckDB oracle
+    # dedup_clusters_star is dedup_clusters under its former name
     sql["dedup_clusters_star"] = sql["dedup_clusters"]
     # probe-all LSH ANN == probe-all IVF ANN == brute-force top-k — all
     # three scale paths share the one exact-cosine oracle

@@ -4,7 +4,7 @@
         jobs/dedup_job.py --docs <parquet dir> --out <dir> \
         [--method minhash|simhash|embedding|exact] [--threshold 0.8] \
         [--embeddings <parquet>] [--cosine-threshold 0.95] \
-        [--algorithm label|star] [--from-spans]
+        [--from-spans]
 
 Runs the full training-data dedup flow over a documents table:
 
@@ -18,8 +18,8 @@ Runs the full training-data dedup flow over a documents table:
    docs id space (``--method embedding``, pair endpoints remapped through
    the exact pass's keep mapping);
 3. connected-component resolution of the pairs into keep/drop clusters
-   (min-label propagation, or ``--algorithm star`` for the O(log n)-round
-   large-star/small-star variant on unknown-diameter pair graphs);
+   (``dedup.resolve_pair_clusters``: min-label propagation with pointer
+   jumping, each id's survivor is its component's minimum id);
 4. writes ``out/kept`` (the deduplicated corpus), ``out/exact_groups``
    and ``out/near_clusters`` (the audit tables), and prints one JSON
    metrics line.
@@ -73,8 +73,6 @@ def main() -> None:
                    help="simhash: max bit distance for a pair")
     p.add_argument("--bands", type=int, default=32)
     p.add_argument("--shingle", type=int, default=3)
-    p.add_argument("--algorithm", choices=["label", "star"],
-                   default="label")
     args = p.parse_args()
 
     spark = SparkSession.builder.appName("spider-dedup").getOrCreate()
@@ -172,9 +170,7 @@ def main() -> None:
     if pairs is not None:
         pairs = pairs.persist()
         n_pairs = pairs.count()
-        clusters = dedup.resolve_pair_clusters(
-            pairs, algorithm=args.algorithm
-        ).persist()
+        clusters = dedup.resolve_pair_clusters(pairs).persist()
         n_clustered = clusters.count()
         clusters.write.mode("overwrite").parquet(args.out + "/near_clusters")
         kept = dedup.dedup_keep_rows(survivors, clusters, args.id_col)

@@ -27,6 +27,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import LongType
 
+from .dedup import drop_hot_buckets
+
 # 5 blocks: bit spans over the 64-bit signature (dedup_util.cc:12-55 layout)
 BLOCK_BOUNDS = [(0, 13), (13, 26), (26, 39), (39, 52), (52, 64)]
 BLOCK_PAIRS = [
@@ -312,9 +314,10 @@ def simhash_candidates(
     identical signs (boilerplate/empty pages) all share the same 10
     buckets, and the self-join would expand each such bucket
     quadratically. ``max_bucket_size`` drops those degenerate buckets
-    (same bound as dedup.lsh_candidates): members above the cap are
-    ~all mutual exact duplicates, better handled by an exact-dup
-    pre-pass (dedup.exact_duplicates on the sign itself). The exact
+    with a warning naming their count (dedup.drop_hot_buckets, shared
+    with embedding_near_duplicates): members above the cap are ~all
+    mutual exact duplicates, better handled by an exact-dup pre-pass
+    (dedup.exact_duplicates on the sign itself). The exact
     hamming filter (bit_count, JVM intrinsic) runs only on bucket
     collisions.
     """
@@ -323,17 +326,8 @@ def simhash_candidates(
         F.col(sign_col).alias("sign"),
         F.explode(F.array(*block_keys(sign_col))).alias("k"),
     ).select("id", "sign", "k.table_id", "k.block_key")
-    if max_bucket_size is not None:
-        # hot keys are few by construction (each absorbs many rows) →
-        # broadcast anti-join; the count is a cheap partial-agg pass
-        hot = (
-            keyed.groupBy("table_id", "block_key").count()
-            .filter(F.col("count") > max_bucket_size)
-            .drop("count")
-        )
-        keyed = keyed.join(
-            F.broadcast(hot), ["table_id", "block_key"], "left_anti"
-        )
+    keyed = drop_hot_buckets(keyed, ["table_id", "block_key"],
+                             max_bucket_size, "simhash_candidates")
     left = keyed
     right = (
         keyed.withColumnRenamed("id", "id_b")

@@ -233,7 +233,7 @@ def test_embedding_dropped_bucket_count_surfaces(spark):
     assert msgs, "expected a dropped-bucket warning"
 
 
-# -- large-star/small-star variant ------------------------------------------
+# -- resolver vs union-find, chains, edge cases -----------------------------
 
 
 def _union_find(pairs):
@@ -256,95 +256,79 @@ def _union_find(pairs):
 
 
 def test_star_clusters_match_union_find_random(spark):
-    """Star variant vs a Python union-find on seeded random graphs —
-    several densities so both sparse forests and collapsed blobs are hit."""
+    """Resolver vs a Python union-find on seeded random graphs — several
+    densities so both sparse forests and collapsed blobs are hit; the
+    300-node forest needs 9 iterations."""
     import random
 
-    for seed, n, m in [(1, 40, 25), (2, 40, 60), (3, 25, 120)]:
+    for seed, n, m in [(1, 40, 25), (2, 40, 60), (3, 25, 120),
+                       (4, 300, 280)]:
         rng = random.Random(seed)
         pairs = [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
         pairs = [(a, b) for a, b in pairs if a != b]
         truth = _union_find(pairs)
         df = spark.createDataFrame(pairs, "a long, b long")
         got = {r["id"]: r["keep_id"]
-               for r in dedup.resolve_pair_clusters(
-                   df, algorithm="star").collect()}
+               for r in dedup.resolve_pair_clusters(df).collect()}
         assert got == truth, f"seed={seed}"
 
 
 def test_star_equals_label_on_chain_and_strings(spark):
-    """Star and label variants agree (same (id, keep_id) table) on a
-    transitive chain and on string ids."""
-    pairs = spark.createDataFrame(
-        [(2, 3), (3, 4), (4, 5), (10, 11)], "a long, b long"
-    )
-    label = {(r["id"], r["keep_id"])
-             for r in dedup.resolve_pair_clusters(pairs).collect()}
-    star = {(r["id"], r["keep_id"])
-            for r in dedup.resolve_pair_clusters(
-                pairs, algorithm="star").collect()}
-    assert star == label
-
+    """String ids resolve to the lexicographic component minimum, in
+    either pair orientation."""
     spairs = spark.createDataFrame(
         [("u-b", "u-a"), ("u-b", "u-c"), ("zz", "zy")],
         "a string, b string",
     )
     got = {r["id"]: r["keep_id"]
-           for r in dedup.resolve_pair_clusters(
-               spairs, algorithm="star").collect()}
+           for r in dedup.resolve_pair_clusters(spairs).collect()}
     assert got == {"u-a": "u-a", "u-b": "u-a", "u-c": "u-a",
                    "zy": "zy", "zz": "zy"}
 
 
 def test_star_beats_label_on_long_chain(spark):
-    """The reason the star variant exists: a path of length 40 exceeds a
-    label-propagation budget of 8 rounds (needs diameter ≈ 39) but the
-    O(log n) star alternation converges well inside it."""
-    import pytest as _pytest
-
+    """Pointer jumping: a 40-node path (diameter 39) converges within 8
+    iterations, where plain min-label propagation needs about 40."""
     chain = [(i, i + 1) for i in range(39)]
     df = spark.createDataFrame(chain, "a long, b long")
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        dedup.resolve_pair_clusters(df, max_iters=8)
     got = {r["id"]: r["keep_id"]
-           for r in dedup.resolve_pair_clusters(
-               df, max_iters=8, algorithm="star").collect()}
+           for r in dedup.resolve_pair_clusters(df, max_iters=8).collect()}
     assert got == {i: 0 for i in range(40)}
 
 
-def test_star_empty_and_bad_algorithm(spark):
-    import pytest as _pytest
+def test_resolve_pair_clusters_long_path_default_iters(spark):
+    """A 200-node path, listed from its far end, resolves under the
+    default ``max_iters`` (plain propagation would need ~200 rounds)."""
+    chain = [(i + 1, i) for i in reversed(range(199))]
+    df = spark.createDataFrame(chain, "a long, b long")
+    got = {r["id"]: r["keep_id"]
+           for r in dedup.resolve_pair_clusters(df).collect()}
+    assert got == {i: 0 for i in range(200)}
 
+
+def test_star_empty_and_bad_algorithm(spark):
     empty = spark.createDataFrame([], "a long, b long")
-    assert dedup.resolve_pair_clusters(empty, algorithm="star").count() == 0
-    with _pytest.raises(ValueError, match="unknown algorithm"):
-        dedup.resolve_pair_clusters(empty, algorithm="cc")
+    assert dedup.resolve_pair_clusters(empty).count() == 0
 
 
 def test_resolve_pair_clusters_reliable_checkpoint(spark, tmp_path):
     """Cluster escape hatch: with a checkpoint dir set, reliable=True
-    routes both variants through the persistent store and the cluster
+    routes every iteration through the persistent store and the cluster
     table is unchanged."""
     spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
     pairs = spark.createDataFrame(
         [(2, 3), (3, 4), (10, 11)], "a long, b long"
     )
-    want = {2: 2, 3: 2, 4: 2, 10: 10, 11: 10}
-    for algo in ("label", "star"):
-        got = {r["id"]: r["keep_id"]
-               for r in dedup.resolve_pair_clusters(
-                   pairs, algorithm=algo, reliable=True).collect()}
-        assert got == want, algo
+    got = {r["id"]: r["keep_id"]
+           for r in dedup.resolve_pair_clusters(
+               pairs, reliable=True).collect()}
+    assert got == {2: 2, 3: 2, 4: 2, 10: 10, 11: 10}
 
 
 def test_cluster_variants_agree_on_reflexive_pairs(spark):
     """A reflexive (x, x) pair carries no edge but its id must still
-    appear in the output with keep_id = itself — in BOTH variants
-    (review r4: the star variant used to drop self-pair-only ids)."""
+    appear in the output with keep_id = itself."""
     pairs = spark.createDataFrame([(5, 5), (1, 2)], "a long, b long")
-    want = {1: 1, 2: 1, 5: 5}
-    for algo in ("label", "star"):
-        got = {r["id"]: r["keep_id"]
-               for r in dedup.resolve_pair_clusters(
-                   pairs, algorithm=algo).collect()}
-        assert got == want, algo
+    got = {r["id"]: r["keep_id"]
+           for r in dedup.resolve_pair_clusters(pairs).collect()}
+    assert got == {1: 1, 2: 1, 5: 5}

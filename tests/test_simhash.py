@@ -178,18 +178,28 @@ def test_assign_simhash_onto_linkbase(spark):
 
 def test_simhash_candidates_bucket_cap(spark):
     """Degenerate buckets (identical signs from boilerplate pages) are
-    skipped under max_bucket_size instead of expanding quadratically;
-    distinct-but-close signs still pair."""
-    from pyspark.sql import functions as F
+    skipped under max_bucket_size instead of expanding quadratically,
+    with a warning naming how many ("no silent caps"); distinct-but-close
+    signs still pair."""
+    import warnings
 
     rows = [(i, 0xDEADBEEF) for i in range(8)]  # identical signs
     rows += [(100, 0x12345678), (101, 0x12345679)]  # hamming 1
     docs = spark.createDataFrame(rows, "doc_id long, simhash long")
-    capped = sh.simhash_candidates(docs, max_bucket_size=4)
+    with warnings.catch_warnings(record=True) as w:
+        warnings.simplefilter("always")
+        capped = sh.simhash_candidates(docs, max_bucket_size=4)
+    msgs = [str(x.message) for x in w
+            if "buckets exceed max_bucket_size=4" in str(x.message)]
+    # the 8 identical signs share one bucket in each of the 10 tables
+    assert len(msgs) == 1 and "simhash_candidates: 10 " in msgs[0], msgs
     pairs = {(r["a"], r["b"]) for r in capped.collect()}
     assert (100, 101) in pairs
     assert not any(a < 8 and b < 8 for a, b in pairs)
-    full = sh.simhash_candidates(docs, max_bucket_size=None)
+    with warnings.catch_warnings(record=True) as w:
+        warnings.simplefilter("always")
+        full = sh.simhash_candidates(docs, max_bucket_size=None)
+    assert not [x for x in w if "max_bucket_size" in str(x.message)]
     assert {(r["a"], r["b"]) for r in full.collect()} >= pairs | {(0, 1)}
 
 
